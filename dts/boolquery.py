@@ -40,7 +40,7 @@ from dts.tokenizer import tokenize_text
 BOOL_SCHEMA = "bq_id long, doc_id long"
 
 
-def _decode_docs(rows: pd.DataFrame, block_size: int, codec: str) -> np.ndarray:
+def _decode_docs(rows: pd.DataFrame, block_size: int) -> np.ndarray:
     """Ascending doc_id array for one (term, bucket) slot. Multiple rows
     appear after incremental merges; their runs cover disjoint ascending
     doc ranges, so sorting runs by first doc yields a globally ascending
@@ -58,7 +58,6 @@ def _decode_docs(rows: pd.DataFrame, block_size: int, codec: str) -> np.ndarray:
             tf_offs=np.asarray(r["tf_offs"], dtype=np.int32),
             dl_offs=np.asarray(r["dl_offs"], dtype=np.int32),
             block_size=block_size,
-            codec=codec,
         )
         docs, _, _ = decode_postings(p)
         runs.append(docs)
@@ -69,7 +68,7 @@ def _decode_docs(rows: pd.DataFrame, block_size: int, codec: str) -> np.ndarray:
 ROLE_MUST, ROLE_SHOULD, ROLE_NOT = 0, 1, 2
 
 
-def _bool_matcher_fn(block_size: int, codec: str):
+def _bool_matcher_fn(block_size: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -90,7 +89,7 @@ def _bool_matcher_fn(block_size: int, codec: str):
             key=lambda s: int(s["n"].sum()),
         )
         for s in slots:
-            d = _decode_docs(s, block_size, codec)
+            d = _decode_docs(s, block_size)
             docs = d if docs is None else np.intersect1d(
                 docs, d, assume_unique=True
             )
@@ -99,7 +98,7 @@ def _bool_matcher_fn(block_size: int, codec: str):
         if msm > 0:
             should = pdf[pdf["role"] == ROLE_SHOULD]
             sh_slots = [
-                _decode_docs(should[should["i"] == i], block_size, codec)
+                _decode_docs(should[should["i"] == i], block_size)
                 for i in sorted(should["i"].unique())
             ]
             if docs is None:
@@ -122,7 +121,7 @@ def _bool_matcher_fn(block_size: int, codec: str):
             nd = np.unique(
                 np.concatenate(
                     [
-                        _decode_docs(neg[neg["i"] == i], block_size, codec)
+                        _decode_docs(neg[neg["i"] == i], block_size)
                         for i in neg["i"].unique()
                     ]
                 )
@@ -211,7 +210,7 @@ def boolean_match_docs(
         F.broadcast(qt), "term"
     )
     out = postings.groupBy("bq_id", "bucket").applyInPandas(
-        _bool_matcher_fn(meta["block_size"], meta.get("codec", "varint")),
+        _bool_matcher_fn(meta["block_size"]),
         BOOL_SCHEMA,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
@@ -220,11 +219,11 @@ def boolean_match_docs(
 TERMS_SET_SCHEMA = "tq_id long, doc_id long, n_matched int"
 
 
-def _terms_set_counter_fn(block_size: int, codec: str):
+def _terms_set_counter_fn(block_size: int):
     def count_group(pdf: pd.DataFrame) -> pd.DataFrame:
         tq_id = int(pdf["tq_id"].iloc[0])
         slots = [
-            _decode_docs(pdf[pdf["term"] == t], block_size, codec)
+            _decode_docs(pdf[pdf["term"] == t], block_size)
             for t in pdf["term"].unique()
         ]
         docs, cnt = np.unique(np.concatenate(slots), return_counts=True)
@@ -283,7 +282,7 @@ def terms_set_match(
         idx["postings"], sorted({t for _, t in qt_rows}), max_isin_terms
     ).join(F.broadcast(qt), "term")
     counts = postings.groupBy("tq_id", "bucket").applyInPandas(
-        _terms_set_counter_fn(meta["block_size"], meta.get("codec", "varint")),
+        _terms_set_counter_fn(meta["block_size"]),
         TERMS_SET_SCHEMA,
     )
     counts = mask_deleted_rows(counts, spark, index_dir, meta)

@@ -51,7 +51,7 @@ DECODE_SCHEMA = (
 )
 
 
-def _decode_check_fn(bucket_size: int, block_size: int, codec: str, avgdl: float,
+def _decode_check_fn(bucket_size: int, block_size: int, avgdl: float,
                      check_bmw: bool):
     from dts.codec import PackedPostings, bm25_impact, decode_postings
 
@@ -72,7 +72,6 @@ def _decode_check_fn(bucket_size: int, block_size: int, codec: str, avgdl: float
                     tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                     dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                     block_size=block_size,
-                    codec=codec,
                 )
                 d, tf, dl = decode_postings(p)
                 bad_order = int(np.sum(np.diff(d) <= 0)) if len(d) > 1 else 0
@@ -131,8 +130,8 @@ def check_index(
         "dl_offs",
     ).mapInPandas(
         _decode_check_fn(
-            meta["bucket_size"], meta["block_size"],
-            meta.get("codec", "varint"), meta["avgdl"], check_bmw,
+            meta["bucket_size"], meta["block_size"], meta["avgdl"],
+            check_bmw,
         ),
         DECODE_SCHEMA,
     )

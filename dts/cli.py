@@ -64,7 +64,6 @@ def cmd_build(args) -> None:
         meta = build_index(
             spark, docs, args.out, bucket_size=args.bucket_size,
             positions=args.positions, strip_literals=args.strip_literals,
-            codec=args.codec,
         )
     print(json.dumps(meta, sort_keys=True))
 
@@ -326,7 +325,6 @@ def main(argv: list[str] | None = None) -> None:
     g.add_argument("--resumable", action="store_true")
     g.add_argument("--positions", action="store_true")
     g.add_argument("--strip-literals", action="store_true")
-    g.add_argument("--codec", choices=["varint", "packed"], default="varint")
     g.add_argument("--lineage", default=None)
     g.set_defaults(fn=cmd_build)
 

@@ -1,28 +1,23 @@
-"""Delta + block codecs for posting lists — pure numpy (O22).
+"""Delta+varint block codec for posting lists — pure numpy (O22).
 
 The reference keeps raw bytes in memory (no encoding, src/apm1.c:212-232);
 the north rule mandates docID-sorted, delta-encoded block-compressed
 posting lists. Everything here is vectorized numpy byte-twiddling — no
-per-element Python in encode or decode hot paths.
+per-element Python in encode or decode hot paths. This module is the only
+one that knows the wire format.
 
 Wire format (one posting list = one `PackedPostings`):
 - postings are split into blocks of ``BLOCK_SIZE`` entries;
 - per block, doc_ids are delta-encoded (first entry ABSOLUTE, so any block
   decodes independently — that is what makes block skipping possible),
-  tfs and dls raw; all three streams encoded with the list's ``codec``:
-  - ``varint`` (default): LEB128 — little-endian 7-bit groups,
-    MSB = continuation;
-  - ``packed``: frame-of-reference binary packing (the PForDelta family
-    without the exception patch list): per block one width byte
-    w = bits(max value in block), then ceil(cnt·w/8) bytes of
-    little-endian-bit-packed values. Chosen per index via
-    build_index(codec=...) and recorded in meta.json; scoring/phrase
-    decode dispatch on PackedPostings.codec.
+  tfs and dls raw; all three streams are LEB128 varints (little-endian
+  7-bit groups, MSB = continuation). meta.json records the format as
+  ``"codec": "varint"``; ``check_codec`` rejects any other value, so an
+  index written in another format fails at load and must be rebuilt;
 - per-block metadata kept as plain arrays (parquet columns):
   ``last_doc`` (skip pointer), ``max_impact`` (block-max BM25 impact,
   float64 upper bound — exact, not quantized, so WAND pruning is safe),
-  byte offsets of each block in each stream (both codecs byte-align
-  blocks, so the same offset columns serve both).
+  byte offsets of each block in each stream.
 """
 
 from __future__ import annotations
@@ -80,125 +75,23 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return vals
 
 
-# --- frame-of-reference binary packing ("packed" codec) --------------------
-
-
-def _bit_widths(block_max: np.ndarray) -> np.ndarray:
-    """Per-block bit width = bit_length(max), min 1, capped 64. frexp's
-    exponent ≥ true bit_length (float rounding only ever rounds UP across a
-    power-of-two boundary), so widths are always sufficient."""
-    m = np.asarray(block_max, dtype=np.uint64)
-    _, exp = np.frexp(m.astype(np.float64))
-    return np.clip(exp, 1, 64).astype(np.int64)
-
-
-def pack_stream(values: np.ndarray, block_counts: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Bit-pack ``values`` into per-block frames: [width byte][payload].
-
-    ``block_counts``: values per block (all > 0). Blocks are byte-aligned
-    so the per-block byte offsets (returned, len n_blocks+1) slice the blob
-    exactly like the varint path's offsets. Fully vectorized: one bit
-    scatter + one packbits over the whole stream.
-    """
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    counts = np.asarray(block_counts, dtype=np.int64)
-    nb = len(counts)
-    if len(v) == 0 or nb == 0:
-        return b"", np.zeros(max(nb, 0) + 1, dtype=np.int64)
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    widths = _bit_widths(np.maximum.reduceat(v, bounds[:-1]))
-    payload_bytes = (counts * widths + 7) // 8
-    block_bytes = 1 + payload_bytes  # leading width byte
-    offs = np.concatenate(([0], np.cumsum(block_bytes)))
-    total_bytes = int(offs[-1])
-
-    # Bit positions: value i (at index j within its block b) occupies bits
-    # [(offs[b]+1)*8 + j*w_b, +w_b) — width byte skipped, little-endian bits.
-    w_per_val = np.repeat(widths, counts)
-    j_in_block = np.arange(len(v)) - np.repeat(bounds[:-1], counts)
-    val_bit_start = (np.repeat(offs[:-1] + 1, counts) * 8) + j_in_block * w_per_val
-    cum_w = np.concatenate(([0], np.cumsum(w_per_val)))
-    total_bits = int(cum_w[-1])
-    val_idx = np.repeat(np.arange(len(v)), w_per_val)
-    bit_in_val = np.arange(total_bits) - np.repeat(cum_w[:-1], w_per_val)
-    bits = np.zeros(total_bytes * 8, dtype=np.uint8)
-    bits[np.repeat(val_bit_start, w_per_val) + bit_in_val] = (
-        (v[val_idx] >> bit_in_val.astype(np.uint64)) & np.uint64(1)
-    ).astype(np.uint8)
-    blob = np.packbits(bits, bitorder="little")
-    blob[offs[:-1]] = widths.astype(np.uint8)
-    return blob.tobytes(), offs
-
-
-def unpack_stream(
-    blob: bytes, block_counts: np.ndarray, block_offs: np.ndarray | None = None
-) -> np.ndarray:
-    """Inverse of pack_stream. ``block_offs`` (len n_blocks, byte starts)
-    defaults to re-deriving offsets from the width bytes sequentially —
-    passing the stored offsets (parquet columns) keeps it fully vectorized.
-    """
-    counts = np.asarray(block_counts, dtype=np.int64)
-    n = int(counts.sum())
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    arr = np.frombuffer(blob, dtype=np.uint8)
-    if block_offs is None:
-        offs = np.zeros(len(counts), dtype=np.int64)
-        o = 0
-        for b, c in enumerate(counts):
-            offs[b] = o
-            w = int(arr[o])
-            o += 1 + (int(c) * w + 7) // 8
-    else:
-        offs = np.asarray(block_offs, dtype=np.int64)
-    widths = arr[offs].astype(np.int64)
-    bits = np.unpackbits(arr, bitorder="little")
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    w_per_val = np.repeat(widths, counts)
-    j_in_block = np.arange(n) - np.repeat(bounds[:-1], counts)
-    val_bit_start = (np.repeat(offs + 1, counts) * 8) + j_in_block * w_per_val
-    cum_w = np.concatenate(([0], np.cumsum(w_per_val)))
-    total_bits = int(cum_w[-1])
-    val_idx_bits = np.arange(total_bits) - np.repeat(cum_w[:-1], w_per_val)
-    contrib = bits[np.repeat(val_bit_start, w_per_val) + val_idx_bits].astype(
-        np.uint64
-    ) << val_idx_bits.astype(np.uint64)
-    return np.add.reduceat(contrib, cum_w[:-1])
-
-
-CODECS = ("varint", "packed")
-
-
-def _encode_stream(
-    values: np.ndarray, block_counts: np.ndarray, codec: str
-) -> tuple[bytes, np.ndarray]:
-    """(blob, byte offsets[len n_blocks+1]) for one stream, either codec."""
-    if codec == "packed":
-        return pack_stream(values, block_counts)
-    parts, offs = [], np.zeros(len(block_counts) + 1, dtype=np.int64)
-    bounds = np.concatenate(([0], np.cumsum(block_counts)))
-    for b in range(len(block_counts)):
-        parts.append(varint_encode(np.asarray(values[bounds[b] : bounds[b + 1]])))
-        offs[b + 1] = offs[b] + len(parts[-1])
-    return b"".join(parts), offs
-
-
-def _decode_stream(
-    blob: bytes,
-    block_counts: np.ndarray,
-    codec: str,
-    block_offs: np.ndarray | None = None,
-) -> np.ndarray:
-    if codec == "packed":
-        return unpack_stream(blob, block_counts, block_offs)
-    return varint_decode(blob, int(np.sum(block_counts)))
-
-
 def bm25_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     """(k1+1)*tf / (tf + k1*(1-b+b*dl/avgdl)) — float64, shared formula."""
     tf = tf.astype(np.float64)
     dl = dl.astype(np.float64)
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+CODEC = "varint"  # the one posting wire format; meta.json's "codec" tag
+
+
+def check_codec(codec: str, where: str = "posting list") -> None:
+    """Raise ``ValueError`` unless ``codec`` is the varint wire format."""
+    if codec != CODEC:
+        raise ValueError(
+            f"{where}: posting codec {codec!r} is not supported (only "
+            f"{CODEC!r}); rebuild the index"
+        )
 
 
 @dataclass
@@ -215,7 +108,10 @@ class PackedPostings:
     tf_offs: np.ndarray
     dl_offs: np.ndarray
     block_size: int = BLOCK_SIZE
-    codec: str = "varint"
+    codec: str = CODEC  # format tag only, checked
+
+    def __post_init__(self) -> None:
+        check_codec(self.codec)
 
 
 def encode_postings(
@@ -224,48 +120,38 @@ def encode_postings(
     dls: np.ndarray,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
-    codec: str = "varint",
 ) -> PackedPostings:
     """Encode one docID-sorted posting list into independent blocks."""
     n = len(doc_ids)
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     assert n == 0 or (np.diff(doc_ids) > 0).all(), "doc_ids must be strictly ascending"
-    n_blocks = (n + block_size - 1) // block_size
+    starts = np.arange(0, n, block_size)
+    bounds = np.append(starts, n)
 
     # Delta within blocks, absolute first entry per block.
-    deltas = np.empty(n, dtype=np.int64)
-    if n:
-        deltas[0] = doc_ids[0]
-        deltas[1:] = np.diff(doc_ids)
-        block_starts = np.arange(0, n, block_size)
-        deltas[block_starts] = doc_ids[block_starts]
-        # Re-delta the first of each block vs nothing (absolute) — done above;
-        # interior entries keep diffs vs predecessor (same block by constr.).
+    deltas = np.diff(doc_ids, prepend=0)
+    deltas[starts] = doc_ids[starts]
 
-    counts = np.minimum(
-        np.arange(1, n_blocks + 1) * block_size, n
-    ) - np.arange(n_blocks) * block_size
-    doc_blob, doc_o = _encode_stream(deltas, counts, codec)
-    tf_blob, tf_o = _encode_stream(np.asarray(tfs), counts, codec)
-    dl_blob, dl_o = _encode_stream(np.asarray(dls), counts, codec)
+    def stream(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+        blob, lens = varint_encode_with_lens(values)
+        return blob, np.concatenate(([0], np.cumsum(lens)))[starts].astype(np.int32)
+
+    doc_blob, doc_o = stream(deltas)
+    tf_blob, tf_o = stream(np.asarray(tfs))
+    dl_blob, dl_o = stream(np.asarray(dls))
     impacts = bm25_impact(np.asarray(tfs), np.asarray(dls), avgdl) if n else np.zeros(0)
-    bounds = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
-    last_doc = doc_ids[bounds[1:] - 1] if n else np.zeros(0, dtype=np.int64)
-    max_imp = (
-        np.maximum.reduceat(impacts, bounds[:-1]) if n else np.zeros(0)
-    )
+    max_imp = np.maximum.reduceat(impacts, starts) if n else np.zeros(0)
     return PackedPostings(
         n=n,
         doc_blob=doc_blob,
         tf_blob=tf_blob,
         dl_blob=dl_blob,
-        block_last_doc=last_doc,
+        block_last_doc=doc_ids[bounds[1:] - 1],
         block_max_impact=max_imp.astype(np.float64),
-        doc_offs=doc_o[:-1].astype(np.int32),
-        tf_offs=tf_o[:-1].astype(np.int32),
-        dl_offs=dl_o[:-1].astype(np.int32),
+        doc_offs=doc_o,
+        tf_offs=tf_o,
+        dl_offs=dl_o,
         block_size=block_size,
-        codec=codec,
     )
 
 
@@ -276,7 +162,6 @@ def encode_bucket_vectorized(
     term_bounds: np.ndarray,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
-    codec: str = "varint",
 ) -> list[dict]:
     """Encode ALL posting lists of one bucket in one vectorized pass.
 
@@ -311,32 +196,6 @@ def encode_bucket_vectorized(
     block_last = doc_ids[block_ends - 1]
     blocks_per_term = -(-counts // block_size)
     tb = np.concatenate(([0], np.cumsum(blocks_per_term)))  # term→block range
-
-    if codec == "packed":
-        # One vectorized pack per stream over the whole bucket; blocks are
-        # byte-aligned frames, so per-term slicing is by BLOCK byte range.
-        bc = block_ends - block_starts
-        doc_blob, doc_boff = pack_stream(deltas, bc)
-        tf_blob, tf_boff = pack_stream(np.asarray(tfs), bc)
-        dl_blob, dl_boff = pack_stream(np.asarray(dls), bc)
-        out = []
-        for t in range(T):
-            s, e = term_bounds[t], term_bounds[t + 1]
-            b0, b1 = tb[t], tb[t + 1]
-            out.append(
-                {
-                    "n": int(e - s),
-                    "doc_blob": doc_blob[doc_boff[b0] : doc_boff[b1]],
-                    "tf_blob": tf_blob[tf_boff[b0] : tf_boff[b1]],
-                    "dl_blob": dl_blob[dl_boff[b0] : dl_boff[b1]],
-                    "block_last_doc": block_last[b0:b1].tolist(),
-                    "block_max_impact": block_max[b0:b1].tolist(),
-                    "doc_offs": (doc_boff[b0:b1] - doc_boff[b0]).astype(np.int32).tolist(),
-                    "tf_offs": (tf_boff[b0:b1] - tf_boff[b0]).astype(np.int32).tolist(),
-                    "dl_offs": (dl_boff[b0:b1] - dl_boff[b0]).astype(np.int32).tolist(),
-                }
-            )
-        return out
 
     doc_blob, doc_lens = varint_encode_with_lens(deltas)
     tf_blob, tf_lens = varint_encode_with_lens(np.asarray(tfs))
@@ -410,31 +269,8 @@ def decode_positions(blob: bytes, counts: np.ndarray) -> tuple[np.ndarray, np.nd
     return orig, bounds
 
 
-def _block_counts(n: int, block_size: int) -> np.ndarray:
-    n_blocks = (n + block_size - 1) // block_size
-    return np.minimum(
-        np.arange(1, n_blocks + 1) * block_size, n
-    ) - np.arange(n_blocks) * block_size
-
-
 def decode_postings(p: PackedPostings) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Full decode → (doc_ids int64 ascending, tfs uint64, dls uint64)."""
-    if p.codec == "packed":
-        counts = _block_counts(p.n, p.block_size)
-        deltas = unpack_stream(p.doc_blob, counts, p.doc_offs).astype(np.int64)
-        tfs = unpack_stream(p.tf_blob, counts, p.tf_offs)
-        dls = unpack_stream(p.dl_blob, counts, p.dl_offs)
-        orig = np.cumsum(deltas)
-        doc_ids = orig
-        bs = p.block_size
-        if p.n > bs:
-            starts = np.arange(bs, p.n, bs)
-            carries = orig[starts - 1].copy()
-            lens = np.minimum(starts + bs, p.n) - starts
-            sub = np.zeros(p.n, dtype=np.int64)
-            sub[bs:] = np.repeat(carries, lens)
-            doc_ids = orig - sub
-        return doc_ids, tfs, dls
     deltas = varint_decode(p.doc_blob, p.n).astype(np.int64)
     orig = np.cumsum(deltas)
     doc_ids = orig
@@ -459,18 +295,12 @@ def decode_block(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode ONE block independently (the skip path for WAND)."""
     n_blocks = len(p.block_last_doc)
-    block_size = p.block_size
-    s, e = bi * block_size, min(p.n, (bi + 1) * block_size)
-    cnt = e - s
-    de = p.doc_offs[bi + 1] if bi + 1 < n_blocks else len(p.doc_blob)
-    te = p.tf_offs[bi + 1] if bi + 1 < n_blocks else len(p.tf_blob)
-    le = p.dl_offs[bi + 1] if bi + 1 < n_blocks else len(p.dl_blob)
-    one = np.array([cnt], dtype=np.int64)
-    zero = np.zeros(1, dtype=np.int64)
-    deltas = _decode_stream(
-        p.doc_blob[p.doc_offs[bi] : de], one, p.codec, zero
-    ).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    tfs = _decode_stream(p.tf_blob[p.tf_offs[bi] : te], one, p.codec, zero)
-    dls = _decode_stream(p.dl_blob[p.dl_offs[bi] : le], one, p.codec, zero)
-    return doc_ids, tfs, dls
+    cnt = min(p.n, (bi + 1) * p.block_size) - bi * p.block_size
+    last = bi + 1 >= n_blocks
+
+    def stream(blob: bytes, offs: np.ndarray) -> np.ndarray:
+        end = len(blob) if last else offs[bi + 1]
+        return varint_decode(blob[offs[bi] : end], cnt)
+
+    doc_ids = np.cumsum(stream(p.doc_blob, p.doc_offs).astype(np.int64))
+    return doc_ids, stream(p.tf_blob, p.tf_offs), stream(p.dl_blob, p.dl_offs)

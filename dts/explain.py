@@ -32,7 +32,7 @@ EXPLAIN_SCHEMA = (
 )
 
 
-def _explain_fn(n_docs: int, avgdl: float, block_size: int, codec: str,
+def _explain_fn(n_docs: int, avgdl: float, block_size: int,
                 targets: dict[int, np.ndarray], similarity: str = "bm25",
                 total_tokens: float = 0.0):
     from dts.codec import PackedPostings, bm25_impact, decode_postings
@@ -81,7 +81,6 @@ def _explain_fn(n_docs: int, avgdl: float, block_size: int, codec: str,
                 tf_offs=np.asarray(r["tf_offs"], dtype=np.int32),
                 dl_offs=np.asarray(r["dl_offs"], dtype=np.int32),
                 block_size=block_size,
-                codec=codec,
             )
             docs, tfs, dls = decode_postings(p)
             if not len(docs):
@@ -173,8 +172,8 @@ def explain_scores(
     )
     return postings.groupBy("query_id", "bucket").applyInPandas(
         _explain_fn(
-            meta["n_docs"], meta["avgdl"], meta["block_size"],
-            meta.get("codec", "varint"), targets, similarity,
+            meta["n_docs"], meta["avgdl"], meta["block_size"], targets,
+            similarity,
             float(meta.get("total_tokens", 0.0)),
         ),
         EXPLAIN_SCHEMA,

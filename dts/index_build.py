@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dts.codec import BLOCK_SIZE
+from dts.codec import BLOCK_SIZE, CODEC, check_codec
 from dts.tokenizer import tokenize_exploded
 
 DEFAULT_BUCKET_SIZE = 4096  # docs per bucket; at 10^12 docs → ~2.4e8 buckets
@@ -170,7 +170,6 @@ def _encode_bucket_fn(
     bucket_size: int,
     block_size: int,
     positions: bool = False,
-    codec: str = "varint",
 ):
     from dts.codec import encode_bucket_vectorized, encode_positions
 
@@ -189,7 +188,6 @@ def _encode_bucket_fn(
             bounds,
             avgdl,
             block_size,
-            codec,
         )
         out = pd.DataFrame(rows)
         out.insert(0, "term", uniq)
@@ -220,7 +218,6 @@ def build_postings(
     avgdl: float,
     bucket_size: int = DEFAULT_BUCKET_SIZE,
     block_size: int = BLOCK_SIZE,
-    codec: str = "varint",
 ) -> DataFrame:
     """The salted term-partitioned merge (see module docstring). Positional
     when the tf table carries a ``positions`` column."""
@@ -229,7 +226,7 @@ def build_postings(
         "bucket", (F.col("doc_id") / F.lit(bucket_size)).cast("long")
     )
     return bucketed.groupBy("bucket").applyInPandas(
-        _encode_bucket_fn(avgdl, bucket_size, block_size, positions, codec),
+        _encode_bucket_fn(avgdl, bucket_size, block_size, positions),
         POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
     )
 
@@ -242,7 +239,6 @@ def build_index(
     block_size: int = BLOCK_SIZE,
     positions: bool = False,
     strip_literals: bool = False,
-    codec: str = "varint",
     extra_meta: dict | None = None,
     store_fields: list[str] | None = None,
     store_term_vectors: bool = False,
@@ -293,130 +289,133 @@ def build_index(
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par * 2)
     tf = build_tf(docs, positions=positions, strip_literals=strip_literals).cache()
-
-    # term_stats FIRST: this one action tokenizes the corpus and fills the
-    # tf cache; every later consumer reads the cache or the written stats.
-    stats = term_stats(tf)
-    timed(
-        "term_stats",
-        # No explicit partition count (round-6): AQE sizes the range
-        # shuffle by advisoryPartitionSizeInBytes, so file counts adapt
-        # to the data (1 file on the toy corpora, ~advisory-sized files
-        # at cluster scale) instead of a cores-derived constant.
-        lambda: stats.repartitionByRange("term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_stats"),
-    )
-    # Corpus totals from the PERSISTED stats (Σcf = Σtf by construction,
-    # vocab-sized scan) + a column-pruned docs pass — the old shape paid a
-    # second full pass over the tf cache for Σtf.
-    def _totals():
-        ts = spark.read.parquet(f"{out_dir}/term_stats").agg(
-            F.sum("cf").alias("t"), F.count("*").alias("v")
-        ).collect()[0]
-        agg = docs.agg(
-            F.count("doc_id").alias("n"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        n_docs = int(agg["n"])
-        total = int(ts["t"] or 0)
-        return {
-            "n_docs": n_docs,
-            "next_doc_id": int(agg["hi"]) + 1 if n_docs else 0,
-            "total_tokens": total,
-            "avgdl": (float(total) / n_docs) if n_docs else 0.0,
-            "vocab_size": int(ts["v"]),
-        }
-
-    meta = timed("corpus_meta", _totals)
-    meta.update(
-        {
-            "bucket_size": bucket_size,
-            "block_size": block_size,
-            "positions": positions,
-            "strip_literals": bool(strip_literals and "lang" in docs.columns),
-            "codec": codec,
-        }
-    )
-
-    # The remaining writes are mutually independent (tf is cached,
-    # term_stats is on disk): submit them from a small thread pool so each
-    # job's straggler tail is back-filled by the next job's tasks (guide
-    # §2.6 overlap) instead of serializing 4-6 driver-side actions.
-    # stage_wall entries are per-job walls and OVERLAP in time.
-    def _postings():
-        # NOTE: no repartitionByRange here — RangePartitioner's sampling
-        # job would recompute the whole encode a second time. Sorting
-        # WITHIN each encode task's output by term gives parquet row-group
-        # min/max stats that prune term lookups just as well.
-        build_postings(
-            tf, meta["avgdl"], bucket_size, block_size, codec
-        ).sortWithinPartitions("term", "bucket").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/postings")
-
-    jobs = [
-        ("postings", _postings),
-        ("trigrams", lambda: write_trigrams(spark, out_dir)),
-        ("terms_rev", lambda: write_reversed_terms(spark, out_dir)),
-        (
-            "doc_stats",
-            lambda: doc_stats(docs, tf)
-            .repartitionByRange("doc_id")
-            .sortWithinPartitions("doc_id")
+    try:
+        # term_stats FIRST: this one action tokenizes the corpus and fills the
+        # tf cache; every later consumer reads the cache or the written stats.
+        stats = term_stats(tf)
+        timed(
+            "term_stats",
+            # No explicit partition count (round-6): AQE sizes the range
+            # shuffle by advisoryPartitionSizeInBytes, so file counts adapt
+            # to the data (1 file on the toy corpora, ~advisory-sized files
+            # at cluster scale) instead of a cores-derived constant.
+            lambda: stats.repartitionByRange("term")
+            .sortWithinPartitions("term")
             .write.mode("overwrite")
-            .parquet(f"{out_dir}/doc_stats"),
-        ),
-    ]
-    if store_fields:
-        missing = [c for c in store_fields if c not in docs.columns]
-        if missing:
-            raise ValueError(f"store_fields not in docs: {missing}")
-        # Column-pruned projection (content never read); doc_id-sorted so
-        # row-group min/max stats serve hit-list pushdown. The range
-        # repartition's sampling job touches only these narrow columns.
-        jobs.append(
+            .parquet(f"{out_dir}/term_stats"),
+        )
+        # Corpus totals from the PERSISTED stats (Σcf = Σtf by construction,
+        # vocab-sized scan) + a column-pruned docs pass — the old shape paid a
+        # second full pass over the tf cache for Σtf.
+        def _totals():
+            ts = spark.read.parquet(f"{out_dir}/term_stats").agg(
+                F.sum("cf").alias("t"), F.count("*").alias("v")
+            ).collect()[0]
+            agg = docs.agg(
+                F.count("doc_id").alias("n"), F.max("doc_id").alias("hi")
+            ).collect()[0]
+            n_docs = int(agg["n"])
+            total = int(ts["t"] or 0)
+            return {
+                "n_docs": n_docs,
+                "next_doc_id": int(agg["hi"]) + 1 if n_docs else 0,
+                "total_tokens": total,
+                "avgdl": (float(total) / n_docs) if n_docs else 0.0,
+                "vocab_size": int(ts["v"]),
+            }
+
+        meta = timed("corpus_meta", _totals)
+        meta.update(
+            {
+                "bucket_size": bucket_size,
+                "block_size": block_size,
+                "positions": positions,
+                "strip_literals": bool(strip_literals and "lang" in docs.columns),
+                "codec": CODEC,
+            }
+        )
+
+        # The remaining writes are mutually independent (tf is cached,
+        # term_stats is on disk): submit them from a small thread pool so each
+        # job's straggler tail is back-filled by the next job's tasks (guide
+        # §2.6 overlap) instead of serializing 4-6 driver-side actions.
+        # stage_wall entries are per-job walls and OVERLAP in time.
+        def _postings():
+            # NOTE: no repartitionByRange here — RangePartitioner's sampling
+            # job would recompute the whole encode a second time. Sorting
+            # WITHIN each encode task's output by term gives parquet row-group
+            # min/max stats that prune term lookups just as well.
+            build_postings(
+                tf, meta["avgdl"], bucket_size, block_size
+            ).sortWithinPartitions("term", "bucket").write.mode(
+                "overwrite"
+            ).parquet(f"{out_dir}/postings")
+
+        jobs = [
+            ("postings", _postings),
+            ("trigrams", lambda: write_trigrams(spark, out_dir)),
+            ("terms_rev", lambda: write_reversed_terms(spark, out_dir)),
             (
-                "doc_meta",
-                lambda: docs.select("doc_id", *store_fields)
+                "doc_stats",
+                lambda: doc_stats(docs, tf)
                 .repartitionByRange("doc_id")
                 .sortWithinPartitions("doc_id")
                 .write.mode("overwrite")
-                .parquet(f"{out_dir}/doc_meta"),
+                .parquet(f"{out_dir}/doc_stats"),
+            ),
+        ]
+        if store_fields:
+            missing = [c for c in store_fields if c not in docs.columns]
+            if missing:
+                raise ValueError(f"store_fields not in docs: {missing}")
+            # Column-pruned projection (content never read); doc_id-sorted so
+            # row-group min/max stats serve hit-list pushdown. The range
+            # repartition's sampling job touches only these narrow columns.
+            jobs.append(
+                (
+                    "doc_meta",
+                    lambda: docs.select("doc_id", *store_fields)
+                    .repartitionByRange("doc_id")
+                    .sortWithinPartitions("doc_id")
+                    .write.mode("overwrite")
+                    .parquet(f"{out_dir}/doc_meta"),
+                )
             )
-        )
-        meta["store_fields"] = list(store_fields)
-    if store_term_vectors:
-        # Doc-major projection of the cached tf frame (no re-tokenize);
-        # range partitioning's sampling job reads the cache, not content.
-        jobs.append(
-            (
-                "term_vectors",
-                lambda: tf.select("doc_id", "term", "tf")
-                .repartitionByRange("doc_id")
-                .sortWithinPartitions("doc_id", "term")
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/term_vectors"),
+            meta["store_fields"] = list(store_fields)
+        if store_term_vectors:
+            # Doc-major projection of the cached tf frame (no re-tokenize);
+            # range partitioning's sampling job reads the cache, not content.
+            jobs.append(
+                (
+                    "term_vectors",
+                    lambda: tf.select("doc_id", "term", "tf")
+                    .repartitionByRange("doc_id")
+                    .sortWithinPartitions("doc_id", "term")
+                    .write.mode("overwrite")
+                    .parquet(f"{out_dir}/term_vectors"),
+                )
             )
-        )
-        meta["store_term_vectors"] = True
-    # DTS_BUILD_POOL=1 forces sequential writes; A/B at 480k docs
-    # (local[8], alternating reps) showed overlap ≈ sequential ≈ the old
-    # shape within the box's noise band there (mins 14.0 / 15.7 / 15.5 s),
-    # while at latency-bound scale overlap wins (~2 s of the 5k-doc
-    # build); 3 jobs in flight is the guide §2.6 sweet spot.
-    import os as _os
-    _pool_n = int(_os.environ.get("DTS_BUILD_POOL", "3"))
-    with ThreadPoolExecutor(max_workers=_pool_n) as pool:
-        futures = [(n, pool.submit(timed, n, fn)) for n, fn in jobs]
-        for _, fut in futures:
-            fut.result()
+            meta["store_term_vectors"] = True
+        # A/B at 480k docs (local[8], alternating reps) showed overlap ≈
+        # sequential ≈ the old shape within the box's noise band there (mins
+        # 14.0 / 15.7 / 15.5 s), while at latency-bound scale overlap wins
+        # (~2 s of the 5k-doc build); 3 jobs in flight is the guide §2.6
+        # sweet spot. The first failed job cancels the queued ones.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futures = [pool.submit(timed, n, fn) for n, fn in jobs]
+            try:
+                for fut in futures:
+                    fut.result()
+            except BaseException:
+                pool.shutdown(cancel_futures=True)
+                raise
 
-    meta["stage_wall_sec"] = stage_wall
-    if extra_meta:
-        meta.update(extra_meta)
-    save_meta(out_dir, meta)
-    tf.unpersist()
+        meta["stage_wall_sec"] = stage_wall
+        if extra_meta:
+            meta.update(extra_meta)
+        save_meta(out_dir, meta)
+    finally:
+        tf.unpersist()
     return meta
 
 
@@ -472,8 +471,12 @@ def write_reversed_terms(spark: SparkSession, index_dir: str) -> None:
 
 
 def load_meta(index_dir: str) -> dict:
+    """Read meta.json; raises ``ValueError`` for an index whose postings
+    use a codec other than varint (such an index must be rebuilt)."""
     with open(f"{index_dir}/meta.json") as f:
-        return json.load(f)
+        meta = json.load(f)
+    check_codec(meta.get("codec", CODEC), index_dir)
+    return meta
 
 
 def save_meta(index_dir: str, meta: dict) -> dict:
@@ -526,7 +529,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
 
     meta = load_meta(index_dir)
     block_size = meta["block_size"]
-    codec = meta.get("codec", "varint")
     positional = meta.get("positions", False)
     bucket_size = meta["bucket_size"]
 
@@ -597,7 +599,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                         tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                         dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                         block_size=block_size,
-                        codec=codec,
                     )
                     docs, tfs, _ = _dec(p)
                     hit = np.isin(docs, darr, assume_unique=True)
@@ -710,7 +711,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                 tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                 dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                 block_size=block_size,
-                codec=codec,
             )
             run = decode_postings(p)
             if positional:
@@ -766,7 +766,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             np.asarray(bounds, dtype=np.int64),
             avgdl,
             block_size,
-            codec,
         )
         out = pd.DataFrame(rows)
         out.insert(0, "term", np.array(terms))
@@ -898,8 +897,7 @@ def merge_index(
     # Postings for the new docs, encoded with the NEW avgdl (their blocks'
     # maxima are exact for it); appended as extra parquet files.
     postings = build_postings(
-        tf, new_avgdl, meta["bucket_size"], meta["block_size"],
-        meta.get("codec", "varint"),
+        tf, new_avgdl, meta["bucket_size"], meta["block_size"]
     ).sortWithinPartitions("term", "bucket")
     # Checkpoint-built indexes partition postings by chunk=N directories;
     # mixing top-level files into that layout breaks partition discovery,

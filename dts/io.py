@@ -68,11 +68,25 @@ def local_rows_df(
     collects it driver-side with NO job at all. Columns are cast to the
     DDL schema so dtypes match createDataFrame exactly (probe hashes
     compare dtypes). Falls back to createDataFrame for empty/huge
-    batches or non-inlinable values (NaN/Inf, exotic types)."""
+    batches, non-inlinable values (NaN/Inf, exotic types), or when
+    ``spark.sql.parser.escapedStringLiterals`` is on (string literals are
+    then read verbatim, so no escaping of ``'`` round-trips). Raises
+    ``ValueError`` for a row whose arity differs from the schema."""
     fields = [f.strip().rsplit(" ", 1) for f in schema.split(",")]
+    for r in rows:
+        if len(r) != len(fields):
+            raise ValueError(
+                f"row {r!r} has {len(r)} values; schema {schema!r} has "
+                f"{len(fields)} columns"
+            )
     cells_total = 0
     vals = []
-    if rows and len(rows) <= _LOCAL_REL_MAX_ROWS:
+    if (
+        rows
+        and len(rows) <= _LOCAL_REL_MAX_ROWS
+        and spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower()
+        != "true"
+    ):
         ok = True
         for r in rows:
             lits = []

@@ -42,7 +42,7 @@ def doc_term_vectors(
     seeds = sorted({int(d) for d in doc_ids})
     buckets = sorted({d // bucket_size for d in seeds})
     seed_arr = np.array(seeds, dtype=np.int64)
-    block_size, codec = meta["block_size"], meta.get("codec", "varint")
+    block_size = meta["block_size"]
 
     def extract(it):
         from dts.codec import PackedPostings, decode_postings
@@ -61,7 +61,6 @@ def doc_term_vectors(
                     tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                     dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                     block_size=block_size,
-                    codec=codec,
                 )
                 docs, tfs, _ = decode_postings(p)
                 hit = np.isin(docs, seed_arr, assume_unique=True)

@@ -66,7 +66,6 @@ def _pack(g, i: int, st: dict):
         tf_offs=np.asarray(g["tf_offs"].iat[i], dtype=np.int32),
         dl_offs=np.asarray(g["dl_offs"].iat[i], dtype=np.int32),
         block_size=st["block_size"],
-        codec=st["codec"],
     )
 
 
@@ -225,7 +224,6 @@ def _fused_bucket_topk(
             "avgdl": float(meta["avgdl"]),
             "boost": float(fields[f_name]),
             "block_size": meta["block_size"],
-            "codec": meta.get("codec", "varint"),
         }
         sub_q = local_rows_df(
             spark,
@@ -501,7 +499,6 @@ def fused_flags_topk(
             "avgdl": float(meta["avgdl"]),
             "boost": float(fields[f_name]),
             "block_size": meta["block_size"],
-            "codec": meta.get("codec", "varint"),
         }
         rows = per_field_rows.get(f_name, [])
         qterms = local_rows_df(
@@ -902,9 +899,7 @@ def _decoded_tf_rows(pruned: DataFrame, meta: dict) -> DataFrame:
     """(term, bucket, doc_id, tf) rows from coded posting rows — ONE
     mapInPandas decode pass; tombstones (``_del_ids``, bucket-colocated)
     are masked during the explode so dead docs never reach the agg."""
-    block_size = int(meta["block_size"])
-    codec = meta.get("codec", "varint")
-    geom = {"block_size": block_size, "codec": codec}
+    geom = {"block_size": int(meta["block_size"])}
 
     def explode(batches):
         import numpy as np

@@ -31,7 +31,7 @@ from dts.tokenizer import tokenize_text
 PHRASE_SCHEMA = "phrase_id long, doc_id long, n_matches long"
 
 
-def _decode_row(row, block_size: int, codec: str = "varint"):
+def _decode_row(row, block_size: int):
     p = PackedPostings(
         n=int(row["n"]),
         doc_blob=bytes(row["doc_blob"]),
@@ -43,20 +43,19 @@ def _decode_row(row, block_size: int, codec: str = "varint"):
         tf_offs=np.asarray(row["tf_offs"], dtype=np.int32),
         dl_offs=np.asarray(row["dl_offs"], dtype=np.int32),
         block_size=block_size,
-        codec=codec,
     )
     docs, tfs, dls = decode_postings(p)
     pos_flat, bounds = decode_positions(bytes(row["pos_blob"]), tfs)
     return docs, pos_flat, bounds, dls
 
 
-def _concat_runs(rows: pd.DataFrame, block_size: int, codec: str = "varint"):
+def _concat_runs(rows: pd.DataFrame, block_size: int):
     """Decode and concatenate a slot's posting rows (multiple rows appear
     after incremental merges; runs cover disjoint ascending doc ranges, so
     ordering by first doc yields globally ascending docs). Returns
     (docs, flat_positions, bounds[n_docs+1], dls)."""
     decs = sorted(
-        (_decode_row(r, block_size, codec) for _, r in rows.iterrows()),
+        (_decode_row(r, block_size) for _, r in rows.iterrows()),
         key=lambda t: t[0][0] if len(t[0]) else -1,
     )
     docs = np.concatenate([d[0] for d in decs])
@@ -70,7 +69,7 @@ def _concat_runs(rows: pd.DataFrame, block_size: int, codec: str = "varint"):
     return docs, flat, bounds, dls
 
 
-def _matcher_fn(block_size: int, codec: str = "varint", with_dl: bool = False):
+def _matcher_fn(block_size: int, with_dl: bool = False):
     """``with_dl``: additionally emit each matched doc's length (decoded
     from the same posting rows — no doc_stats join), the denominator input
     of the phrase-frequency BM25 impact.
@@ -104,7 +103,7 @@ def _matcher_fn(block_size: int, codec: str = "varint", with_dl: bool = False):
         slot0_dls: np.ndarray | None = None
         for i in range(m):
             docs, flat, bounds, dls = _concat_runs(
-                pdf[pdf["i"] == i], block_size, codec
+                pdf[pdf["i"] == i], block_size
             )
             slot_docs.append(docs)
             slot_pos.append((flat, bounds))
@@ -176,7 +175,7 @@ def _matcher_fn(block_size: int, codec: str = "varint", with_dl: bool = False):
     return match_group
 
 
-def _prox_matcher_fn(block_size: int, slop: int, codec: str = "varint"):
+def _prox_matcher_fn(block_size: int, slop: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -188,8 +187,8 @@ def _prox_matcher_fn(block_size: int, slop: int, codec: str = "varint"):
         pair_id = int(pdf["pair_id"].iloc[0])
         if pdf["i"].nunique() != 2:
             return empty
-        da, fa, ba, _ = _concat_runs(pdf[pdf["i"] == 0], block_size, codec)
-        db, fb, bb, _ = _concat_runs(pdf[pdf["i"] == 1], block_size, codec)
+        da, fa, ba, _ = _concat_runs(pdf[pdf["i"] == 0], block_size)
+        db, fb, bb, _ = _concat_runs(pdf[pdf["i"] == 1], block_size)
         if not len(fa) or not len(fb):
             return empty
         # Packed keys: doc * P + pos; P leaves headroom for p + slop so a
@@ -253,7 +252,7 @@ def proximity_match_counts(
         F.broadcast(qt), "term"
     )
     out = postings.groupBy("pair_id", "bucket").applyInPandas(
-        _prox_matcher_fn(meta["block_size"], slop, meta.get("codec", "varint")),
+        _prox_matcher_fn(meta["block_size"], slop),
         "pair_id long, doc_id long, n_matches long",
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
@@ -313,13 +312,13 @@ def phrase_match_counts(
         F.broadcast(qt), "term"
     )
     out = postings.groupBy("phrase_id", "bucket").applyInPandas(
-        _matcher_fn(meta["block_size"], meta.get("codec", "varint"), with_dl),
+        _matcher_fn(meta["block_size"], with_dl),
         schema,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
 
 
-def _multi_matcher_fn(block_size: int, codec: str):
+def _multi_matcher_fn(block_size: int):
     """Exact-adjacency matcher where a SLOT may hold ALTERNATIVE terms
     (Lucene MultiPhraseQuery): slot i's occurrence keys are the UNION of
     its terms' position keys — still unique (a position holds exactly
@@ -349,7 +348,7 @@ def _multi_matcher_fn(block_size: int, codec: str):
             rows_i = pdf[pdf["i"] == i]
             per_term = []
             for _, g in rows_i.groupby("term", sort=False):
-                docs, flat, bounds, _ = _concat_runs(g, block_size, codec)
+                docs, flat, bounds, _ = _concat_runs(g, block_size)
                 per_term.append((docs, flat, bounds))
                 if len(flat):
                     pos_max = max(pos_max, int(flat.max()))
@@ -480,7 +479,7 @@ def phrase_prefix_counts(
         F.broadcast(qt), "term"
     )
     out = postings.groupBy("pp_id", "bucket").applyInPandas(
-        _multi_matcher_fn(meta["block_size"], meta.get("codec", "varint")),
+        _multi_matcher_fn(meta["block_size"]),
         "pp_id long, doc_id long, n_matches long",
     )
     return mask_deleted_rows(out, spark, index_dir, meta)

@@ -178,7 +178,6 @@ def _scorer_fn(
     k: int,
     strategy: str,
     block_size: int,
-    codec: str = "varint",
     mode: str = "or",
     m_map: dict[int, int] | None = None,
     filter_qids: set[int] | None = None,
@@ -319,7 +318,6 @@ def _scorer_fn(
                 tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                 dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                 block_size=block_size,
-                codec=codec,
             )
 
         if strategy == "bmw":
@@ -957,7 +955,7 @@ def _score_filtered(
         raise ValueError("function_score doc values require strategy='taat'")
     scorer = _scorer_fn(
         meta["n_docs"], meta["avgdl"], k, strategy, meta["block_size"],
-        meta.get("codec", "varint"), mode, m_map, filter_qids,
+        mode, m_map, filter_qids,
         similarity, after_map, dv_spec,
         total_tokens=float(meta.get("total_tokens", 0.0)),
     )
@@ -1271,7 +1269,6 @@ def bm25_shard_candidates(
     )
     scorer = _scorer_fn(
         meta["n_docs"], meta["avgdl"], 2**62, strategy, meta["block_size"],
-        meta.get("codec", "varint"),
     )
 
     # repartition + mapInPandas with partition-level grouping instead of
@@ -1356,7 +1353,7 @@ def shard_candidates_mixed(
     )
     scorer = _scorer_fn(
         meta["n_docs"], meta["avgdl"], 2**62, "taat", meta["block_size"],
-        meta.get("codec", "varint"), mode="mixed_flags",
+        mode="mixed_flags",
     )
     n_parts = max(1, 2 * spark.sparkContext.defaultParallelism)
     src = joined.repartition(n_parts, "query_id", "shard")

@@ -46,9 +46,8 @@ def get_spark(
         # zstd: markedly better ratio than snappy at similar read speed
         # (optimization guide §6); index blobs are already entropy-coded
         # varint streams, so measure before assuming — A/B on the bench
-        # showed parity walls with ~25% smaller postings. Override with
-        # DTS_PARQUET_CODEC=snappy to compare.
-        .config("spark.sql.parquet.compression.codec", os.environ.get("DTS_PARQUET_CODEC", "zstd"))
+        # showed parity walls with ~25% smaller postings.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("DTS_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )

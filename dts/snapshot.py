@@ -59,7 +59,6 @@ def index_stats(index_dir: str) -> dict:
         "total_tokens": meta.get("total_tokens"),
         "revision": meta.get("revision", 0),
         "positions": bool(meta.get("positions")),
-        "codec": meta.get("codec", "varint"),
         "bytes_total": sum(comp_bytes.values()),
         "bytes_by_component": dict(sorted(comp_bytes.items())),
     }

@@ -52,13 +52,13 @@ def _require_positions(meta: dict, what: str) -> None:
         )
 
 
-def _span_first_matcher(block_size: int, codec: str):
+def _span_first_matcher(block_size: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         from dts.phrase import _concat_runs
 
         sq_id = int(pdf["sq_id"].iloc[0])
         limit = int(pdf["limit"].iloc[0])
-        docs, flat, bounds, _ = _concat_runs(pdf, block_size, codec)
+        docs, flat, bounds, _ = _concat_runs(pdf, block_size)
         if not len(docs):
             return pd.DataFrame(
                 {
@@ -107,13 +107,13 @@ def span_first_counts(
         idx["postings"], sorted({t for _, t, _ in rows}), max_isin_terms
     ).join(F.broadcast(qt), "term")
     out = postings.groupBy("sq_id", "bucket").applyInPandas(
-        _span_first_matcher(meta["block_size"], meta.get("codec", "varint")),
+        _span_first_matcher(meta["block_size"]),
         SPAN_SCHEMA,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
 
 
-def _span_near_matcher(block_size: int, codec: str):
+def _span_near_matcher(block_size: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -130,7 +130,7 @@ def _span_near_matcher(block_size: int, codec: str):
         from dts.phrase import _concat_runs
 
         slots = [
-            _concat_runs(pdf[pdf["i"] == i], block_size, codec)
+            _concat_runs(pdf[pdf["i"] == i], block_size)
             for i in range(m)
         ]
         pos_max = max(
@@ -219,13 +219,13 @@ def span_near_counts(
         .join(F.broadcast(shape), "sq_id")
     )
     out = postings.groupBy("sq_id", "bucket").applyInPandas(
-        _span_near_matcher(meta["block_size"], meta.get("codec", "varint")),
+        _span_near_matcher(meta["block_size"]),
         SPAN_SCHEMA,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
 
 
-def _span_not_matcher(block_size: int, codec: str):
+def _span_not_matcher(block_size: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -245,12 +245,12 @@ def _span_not_matcher(block_size: int, codec: str):
         from dts.phrase import _concat_runs
 
         slots = [
-            _concat_runs(inc[inc["i"] == i], block_size, codec)
+            _concat_runs(inc[inc["i"] == i], block_size)
             for i in range(m)
         ]
         exc = pdf[pdf["role"] == 1]
         exc_runs = (
-            _concat_runs(exc, block_size, codec) if len(exc) else None
+            _concat_runs(exc, block_size) if len(exc) else None
         )
         pos_max = max(
             (int(f.max()) for _, f, _, _ in slots if len(f)), default=0
@@ -380,13 +380,13 @@ def span_not_counts(
         .join(F.broadcast(shape), "sq_id")
     )
     out = postings.groupBy("sq_id", "bucket").applyInPandas(
-        _span_not_matcher(meta["block_size"], meta.get("codec", "varint")),
+        _span_not_matcher(meta["block_size"]),
         SPAN_SCHEMA,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)
 
 
-def _interval_unordered_matcher(block_size: int, codec: str):
+def _interval_unordered_matcher(block_size: int):
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -404,7 +404,7 @@ def _interval_unordered_matcher(block_size: int, codec: str):
         from dts.phrase import _concat_runs
 
         slots = [
-            _concat_runs(pdf[pdf["i"] == i], block_size, codec)
+            _concat_runs(pdf[pdf["i"] == i], block_size)
             for i in range(m)
         ]
         pos_max = max(
@@ -524,9 +524,7 @@ def interval_unordered_counts(
         .join(F.broadcast(shape), "iq_id")
     )
     out = postings.groupBy("iq_id", "bucket").applyInPandas(
-        _interval_unordered_matcher(
-            meta["block_size"], meta.get("codec", "varint")
-        ),
+        _interval_unordered_matcher(meta["block_size"]),
         INTERVAL_SCHEMA,
     )
     return mask_deleted_rows(out, spark, index_dir, meta)

@@ -42,7 +42,7 @@ _MERGE_SCHEMA = (
 )
 
 
-def _merge_fn(block_size: int, codec: str):
+def _merge_fn(block_size: int):
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["sid"].iloc[0])
         bucket = int(pdf["bucket"].iloc[0])
@@ -61,7 +61,6 @@ def _merge_fn(block_size: int, codec: str):
                 tf_offs=np.asarray(row["tf_offs"], dtype=np.int32),
                 dl_offs=np.asarray(row["dl_offs"], dtype=np.int32),
                 block_size=block_size,
-                codec=codec,
             )
             d, tf, dl = decode_postings(p)
             docs_l.append(d)
@@ -113,7 +112,7 @@ def synonym_syn_rows(
         F.broadcast(mem_df), "term"
     )
     merged = postings.groupBy("sid", "bucket").applyInPandas(
-        _merge_fn(meta["block_size"], meta.get("codec", "varint")),
+        _merge_fn(meta["block_size"]),
         _MERGE_SCHEMA,
     )
     # Blended docFreq = MAX member df (Lucene SynonymQuery); absent

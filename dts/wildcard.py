@@ -593,7 +593,7 @@ def _match_docs_from_expansion(
             F.broadcast(expanded.select("term").distinct()), "term", "left_semi"
         )
     joined = postings.join(F.broadcast(expanded), "term")
-    block_size, codec = meta["block_size"], meta.get("codec", "varint")
+    block_size = meta["block_size"]
 
     def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
         # Union needs no per-term grouping: decode every row, unique the
@@ -615,7 +615,6 @@ def _match_docs_from_expansion(
                 tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
                 dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
                 block_size=block_size,
-                codec=codec,
             )
             parts.append(decode_postings(p)[0])
         docs = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)

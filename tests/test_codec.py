@@ -43,17 +43,14 @@ def test_varint_known_bytes():
         max_size=1500,
     ),
     st.sampled_from([4, 128, 256]),
-    st.sampled_from(["varint", "packed"]),
 )
 @settings(max_examples=60, deadline=None)
-def test_postings_roundtrip(entries, block_size, codec):
+def test_postings_roundtrip(entries, block_size):
     gaps = np.array([e[0] for e in entries], dtype=np.int64)
     doc_ids = np.cumsum(gaps)
     tfs = np.array([e[1] for e in entries], dtype=np.int64)
     dls = np.array([e[2] for e in entries], dtype=np.int64)
-    p = encode_postings(
-        doc_ids, tfs, dls, avgdl=50.0, block_size=block_size, codec=codec
-    )
+    p = encode_postings(doc_ids, tfs, dls, avgdl=50.0, block_size=block_size)
     d, t, l = decode_postings(p)
     assert d.tolist() == doc_ids.tolist()
     assert t.tolist() == tfs.tolist()
@@ -86,7 +83,7 @@ def test_block_max_is_upper_bound():
 import pytest
 
 
-@pytest.mark.parametrize("codec", ["varint", "packed"])
+@pytest.mark.parametrize("codec", ["varint"])
 def test_bucket_vectorized_equals_per_term_encode(codec):
     from dts.codec import encode_bucket_vectorized
 
@@ -105,14 +102,13 @@ def test_bucket_vectorized_equals_per_term_encode(codec):
     uniq, starts = np.unique(terms, return_index=True)
     bounds = np.append(starts, len(terms))
     got = encode_bucket_vectorized(
-        doc_ids, tfs, dls, bounds, avgdl=42.0, block_size=128, codec=codec
+        doc_ids, tfs, dls, bounds, avgdl=42.0, block_size=128
     )
     assert len(got) == len(uniq)
     for ti in range(len(uniq)):
         s, e = bounds[ti], bounds[ti + 1]
-        want = encode_postings(
-            doc_ids[s:e], tfs[s:e], dls[s:e], 42.0, 128, codec=codec
-        )
+        want = encode_postings(doc_ids[s:e], tfs[s:e], dls[s:e], 42.0, 128)
+        assert want.codec == codec
         g = got[ti]
         assert g["n"] == want.n
         assert g["doc_blob"] == want.doc_blob
@@ -135,27 +131,3 @@ def test_compression_ratio_dense_lists():
     assert len(p.doc_blob) < 2 * 100000
     assert len(p.tf_blob) == 100000
     assert len(p.dl_blob) == 100000
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(min_value=0, max_value=2**62), min_size=1, max_size=50),
-        min_size=1,
-        max_size=10,
-    )
-)
-@settings(max_examples=60, deadline=None)
-def test_pack_stream_roundtrip(blocks):
-    from dts.codec import pack_stream, unpack_stream
-
-    counts = np.array([len(b) for b in blocks], dtype=np.int64)
-    vals = np.array([v for b in blocks for v in b], dtype=np.uint64)
-    blob, offs = pack_stream(vals, counts)
-    # sequential (width-byte walking) and offset-driven decode agree
-    assert unpack_stream(blob, counts).tolist() == vals.tolist()
-    assert unpack_stream(blob, counts, offs[:-1]).tolist() == vals.tolist()
-    # blocks are byte-aligned frames: each decodes independently
-    for b, blk in enumerate(blocks):
-        piece = blob[offs[b] : offs[b + 1]]
-        got = unpack_stream(piece, np.array([len(blk)]))
-        assert got.tolist() == list(blk)

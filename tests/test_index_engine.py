@@ -456,65 +456,54 @@ def test_index_handle_cache_and_invalidation(spark, docs_sdf, corpus_pd, tmp_pat
     assert h3["meta"]["n_docs"] == h1["meta"]["n_docs"] + 10
 
 
-@pytest.mark.parametrize("strategy", ["taat", "bmw"])
-def test_packed_codec_index_rank_identity(
-    spark, docs_sdf, oracle, queries_pd, tmp_path, strategy
+def test_non_varint_codec_rejected(spark, index_dir, tmp_path):
+    """Delta+varint is the only posting format: an index whose meta names
+    another codec fails at load with a rebuild hint instead of being
+    varint-decoded into garbage, and a posting list tagged with another
+    codec cannot be constructed."""
+    import json
+    import shutil
+
+    from dts.codec import PackedPostings
+    from dts.score_index import load_index
+
+    d = str(tmp_path / "packed_meta_idx")
+    shutil.copytree(index_dir, d)
+    with open(f"{d}/meta.json") as f:
+        meta = json.load(f)
+    assert meta["codec"] == "varint"
+    meta["codec"] = "packed"
+    with open(f"{d}/meta.json", "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="'packed'.*rebuild the index"):
+        load_index(spark, d)
+
+    none = np.zeros(0, dtype=np.int64)
+    with pytest.raises(ValueError, match="'packed'.*rebuild the index"):
+        PackedPostings(
+            n=0, doc_blob=b"", tf_blob=b"", dl_blob=b"",
+            block_last_doc=none, block_max_impact=none.astype(np.float64),
+            doc_offs=none, tf_offs=none, dl_offs=none, codec="packed",
+        )
+
+
+def test_build_pool_failure_propagates_and_unpersists(
+    spark, corpus_pd, tmp_path, monkeypatch
 ):
-    """An index built with the bit-packed (FOR) codec answers BM25 queries
-    rank- and bit-identically to the oracle under both strategies — the
-    codec is a storage choice, never a semantics choice."""
-    d = str(tmp_path / "packed_idx")
-    meta = build_index(
-        spark, docs_sdf, d, bucket_size=64, block_size=16, codec="packed"
-    )
-    assert meta["codec"] == "packed"
-    queries_sdf = spark.createDataFrame(
-        queries_pd[["query_id", "text", "fuzzy_k"]]
-    )
-    got = (
-        bm25_topk_indexed(spark, d, queries_sdf, k=10, strategy=strategy)
-        .orderBy("query_id", "rank")
-        .collect()
-    )
-    _assert_identical(got, oracle, queries_pd, f"packed-{strategy}")
+    """A failed pooled write job fails build_index with its own error, and
+    the cached tf frame is released all the same."""
+    import dts.index_build as ib
 
+    def fail(spark, index_dir):
+        raise RuntimeError("trigram write failed")
 
-def test_packed_codec_positional_phrase_and_compact(
-    spark, docs_sdf, corpus_pd, tmp_path
-):
-    """Packed codec composes with positional postings (phrase queries) and
-    survives compaction (decode→re-encode roundtrip under the meta codec)."""
-    from dts.index_build import compact_index
-    from dts.oracle import phrase_count
-    from dts.phrase import phrase_match_counts
-    from dts.tokenizer import tokenize_text
-
-    d = str(tmp_path / "packed_pos_idx")
-    build_index(
-        spark, docs_sdf, d, bucket_size=32, block_size=8,
-        positions=True, codec="packed",
-    )
-    ph = spark.createDataFrame(
-        [(0, "def ident1"), (1, "value return")], "phrase_id long, text string"
-    )
-
-    def phrase_got():
-        return {
-            (r.phrase_id, r.doc_id): r.n_matches
-            for r in phrase_match_counts(spark, d, ph).collect()
-        }
-
-    want = {}
-    for pid, text in [(0, "def ident1"), (1, "value return")]:
-        terms = tokenize_text(text)
-        for row in corpus_pd.itertuples():
-            c = phrase_count(row.content, terms)
-            if c:
-                want[(pid, row.doc_id)] = c
-    assert phrase_got() == want and len(want) > 0
-    meta = compact_index(spark, d)
-    assert meta.get("codec", "varint") == "packed"
-    assert phrase_got() == want
+    monkeypatch.setattr(ib, "write_trigrams", fail)
+    docs = spark.createDataFrame(corpus_pd.head(50))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="trigram write failed"):
+        ib.build_index(spark, docs, str(tmp_path / "failed_idx"), bucket_size=64)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_search_after_pagination(spark, index_dir, queries_pd):

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import hashlib
 
-from dts.io import ingest
+import pytest
+
+from dts.io import ingest, local_rows_df
 
 
 def test_sha256_invariant_matches_python(spark, corpus_pd):
@@ -143,3 +145,25 @@ def test_storage_seam_live_iceberg(spark, tmp_path):
     ref = f"iceberg:{cats[0]}.db.seam_test"
     write_table(spark.range(10).withColumnRenamed("id", "doc_id"), ref)
     assert read_table(spark, ref).count() == 10
+
+
+def test_local_rows_df_quotes_and_backslashes_roundtrip(spark):
+    """Terms holding ``'`` and ``\\`` read back exactly with the parser's
+    escapedStringLiterals flag off (inline VALUES) and on (createDataFrame
+    fallback: verbatim literals cannot encode ``'``)."""
+    terms = ["it's", "it\\'s", "a\\b", "''", "\\", "x\\\\'y"]
+    rows = list(enumerate(terms))
+    key = "spark.sql.parser.escapedStringLiterals"
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set(key, flag)
+            got = local_rows_df(spark, rows, "i long, term string").collect()
+            assert sorted((r.i, r.term) for r in got) == rows, flag
+    finally:
+        spark.conf.unset(key)
+
+
+def test_local_rows_df_rejects_wrong_arity(spark):
+    for bad in ([(1, "a"), (2,)], [(1, "a", "extra")]):
+        with pytest.raises(ValueError, match="schema .* has 2 columns"):
+            local_rows_df(spark, bad, "i long, term string")
