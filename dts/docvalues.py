@@ -306,7 +306,6 @@ def function_score_topk(
     modifier: str = "log1p",
     boost_mode: str = "multiply",
     missing: float = 1.0,
-    distribute: str | None = None,
     broadcast_dv: bool = True,
 ) -> DataFrame:
     """ES function_score / field_value_factor over the sidecar: rank by
@@ -332,7 +331,7 @@ def function_score_topk(
     return _dv_scored(
         spark, index_dir, queries, field, k,
         (modifier, float(factor), boost_mode, float(missing)),
-        distribute, broadcast_dv,
+        broadcast_dv,
     )
 
 
@@ -349,7 +348,6 @@ def decay_score_topk(
     k: int = 10,
     boost_mode: str = "multiply",
     missing: float | None = None,
-    distribute: str | None = None,
     broadcast_dv: bool = True,
 ) -> DataFrame:
     """ES decay functions (function_score decay): rank by ``bm25 OP
@@ -383,7 +381,7 @@ def decay_score_topk(
         float(missing),
     )
     return _dv_scored(
-        spark, index_dir, queries, field, k, spec, distribute, broadcast_dv
+        spark, index_dir, queries, field, k, spec, broadcast_dv
     )
 
 
@@ -394,7 +392,6 @@ def _dv_scored(
     field: str,
     k: int,
     dv_spec: tuple,
-    distribute: str | None,
     broadcast_dv: bool,
 ) -> DataFrame:
     """Shared doc-value scoring plumbing: sidecar values → per-bucket
@@ -437,14 +434,14 @@ def _dv_scored(
     idx = load_index(spark, index_dir)
     prep = _prepare_query_scan(
         spark, idx, index_dir, queries, MAX_ISIN_TERMS,
-        need_count=distribute is None,
+        need_count=True,
     )
     if prep is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
     postings, stats, qterms, n_queries, _ = prep
     return _score_filtered(
         spark, idx["meta"], postings, stats, qterms, n_queries, k,
-        "taat", distribute, index_dir,
+        "taat", index_dir,
         dv=dv, dv_spec=dv_spec, broadcast_dv=broadcast_dv,
     )
 
@@ -634,7 +631,6 @@ def rank_feature_topk(
     scaling_factor: float = 1.0,
     exponent: float = 1.0,
     boost: float = 1.0,
-    distribute: str | None = None,
     broadcast_dv: bool = True,
 ) -> DataFrame:
     """ES rank_feature query: the text score plus ``boost · f(S)`` over a
@@ -679,7 +675,7 @@ def rank_feature_topk(
     return _dv_scored(
         spark, index_dir, queries, field, k,
         (spec_mod, float(boost), "sum", 0.0),
-        distribute, broadcast_dv,
+        broadcast_dv,
     )
 
 

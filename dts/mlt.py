@@ -92,7 +92,6 @@ def more_like_this(
     max_terms: int = 25,
     min_df: int = 2,
     strategy: str = "taat",
-    distribute: str | None = None,
 ) -> DataFrame:
     """(query_id=seed doc_id, doc_id, score, rank): top-k most similar
     docs per seed. Term selection: the seed's ``max_terms`` highest
@@ -142,7 +141,7 @@ def more_like_this(
     # k+1 then drop the seed and re-close ranks (tiny k×seeds frame)
     top = score_expanded_terms(
         spark, index_dir, qterms, n_queries=len(set(doc_ids)), k=k + 1,
-        strategy=strategy, distribute=distribute, all_terms=all_terms,
+        strategy=strategy, all_terms=all_terms,
     ).filter(F.col("query_id") != F.col("doc_id"))
     w_rank = Window.partitionBy("query_id").orderBy(
         F.round(F.col("score"), ROUND_RANK).desc(), F.col("doc_id").asc()

@@ -45,7 +45,6 @@ def multi_index_topk(
     index_dirs: list[str],
     queries: DataFrame,
     k: int = 10,
-    distribute: str | None = None,
     doc_bases: list[int] | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
     index_boosts: list[float] | None = None,
@@ -111,8 +110,7 @@ def multi_index_topk(
         postings = term_filter(idx["postings"], terms, max_isin_terms)
         local = _score_filtered(
             spark, blended_meta, postings, stats, qterms,
-            n_queries=len(rows), k=k, strategy="taat",
-            distribute=distribute, index_dir=d,
+            n_queries=len(rows), k=k, strategy="taat", index_dir=d,
         )
         if base:
             local = local.withColumn(

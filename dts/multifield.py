@@ -38,7 +38,6 @@ from dts.score_index import (
     MAX_ISIN_TERMS,
     ROUND_RANK,
     TOPK_SCHEMA,
-    bm25_shard_candidates,
     bm25_topk_indexed,
     scoring_shards,
     topk_merge_global,
@@ -78,12 +77,11 @@ def _fused_scorer(field_stats: dict, k: int, strategy: str):
 
     - ``taat``: per-field accumulation in ascending (term, bucket) order,
       per-field tombstone masking, then Σ_field boost·acc in sorted field
-      order — bit-identical to the candidates+hash-agg path for ≤2 fields
+      order — bit-identical to the per-field oracle sum for ≤2 fields
       (two-addend IEEE754 sums commute), rank-identical always.
     - ``bmw``: one block-max WAND walk over ALL fields' cursors — weight
       = boost·idf, per-cursor avgdl and tombstones (dts.wand round-5
-      extension); the skipping the candidates path structurally cannot do
-      (it must emit every candidate). Rank-identical at the round-9 key.
+      extension). Rank-identical at the round-9 key.
     """
     import numpy as np
     import pandas as pd
@@ -292,9 +290,9 @@ def _fused_flags_scorer(
     with no candidate emission, no hash-agg stage, no filter join and no
     local window. Exact per group: sub-indexes share doc_ids and bucket
     geometry, so a doc's entire cross-field evidence lives in its one
-    shard. Scores are bit-identical to the candidates+hash-agg path for
-    ≤2 fields (two-addend IEEE754 sums commute; per-field accumulation
-    order unchanged)."""
+    shard. Scores are bit-identical to the per-field oracle sum for ≤2
+    fields (two-addend IEEE754 sums commute; per-field accumulation in
+    the engine's fixed order)."""
     import numpy as np
     import pandas as pd
 
@@ -322,8 +320,7 @@ def _fused_flags_scorer(
         has_syn = "_syn_ids" in pdf.columns
         # Per field: candidate docs (ANY clause), scoring accumulation,
         # per-required-clause doc sets, excluded doc set — each masked by
-        # that field's tombstones, exactly the per-field mixed_flags
-        # kernel semantics.
+        # that field's tombstones.
         f_parts = []   # (uniq_f, boost*acc_f)
         req_sets: list[np.ndarray] = []  # one per (field, required clause)
         excl_sets: list[np.ndarray] = []
@@ -390,9 +387,9 @@ def _fused_flags_scorer(
             terms_arr = g["term"].to_numpy()
 
             def _live(s):
-                # req/excl membership must ignore THIS field's tombstones
-                # — the candidates path drops a deleted doc's rows before
-                # the combine, so its clause memberships never count.
+                # req/excl membership must ignore THIS field's tombstones:
+                # a deleted doc's clause memberships in this field never
+                # count.
                 if dead is None or not len(s):
                     return s
                 return s[~np.isin(s, dead, assume_unique=True)]
@@ -477,8 +474,8 @@ def fused_flags_topk(
     union every field's pruned posting rows (clause/role columns riding
     the broadcast qterms join, phrase synthetic rows unioned per field),
     one mapInPandas pass per (query, shard) running _fused_flags_scorer,
-    then the tiny global top-k merge. Replaces per-field candidates +
-    hash-agg + filter + window for the dts.parser.search_fields path."""
+    then the tiny global top-k merge — the dts.parser.search_fields
+    path."""
     import pandas as pd
 
     from dts.delete import has_deletes, join_deletes
@@ -611,33 +608,22 @@ def bm25_topk_multifield(
     k: int = 10,
     strategy: str = "taat",
     default_field: str | None = None,
-    distribute: str | None = None,
 ) -> DataFrame:
     """Top-k over a multifield index. ``queries`` needs (query_id, text
     [, fuzzy_k]); clause routing per ``parse_field_query``. Returns the
     engine-standard (query_id, doc_id, score, rank).
 
-    ``distribute`` (round-4 verdict fix — the old implementation pushed
-    EVERY candidate of every field through one global window partition per
-    query, a single-task sort at head-term scale):
-
-    - ``"bucket"`` (default on many-bucket indexes): sub-indexes share
-      doc_ids AND bucket boundaries, so a document's entire multi-field
-      score lives in ONE bucket shard across all fields. Per field,
-      ``bm25_shard_candidates`` emits full per-(query, shard) candidate
-      scores with an IDENTICAL shard mapping; the weighted union-sum is
-      then grouped per (query, shard, doc), local top-k runs per
-      (query, shard) — every window partition bounded by the shard's doc
-      range — and ``topk_merge_global`` ranks the k×shards survivors.
-      Exact: local top-k under the global ranking key restricted to
-      disjoint shards can never drop a global top-k doc.
-    - ``"query"``: the small-index path — per-field full candidates merged
-      through one window per query (fine when the index itself is small).
-    - ``None``: bucket when the sub-indexes have ≥32 buckets, else query
-      (same shape as auto_distribute: shards only pay off when groups are
-      big enough to amortize).
-
-    Both paths are rank-identical (tested)."""
+    One execution path at every bucket count (``_fused_bucket_topk``):
+    sub-indexes share doc_ids AND bucket boundaries, so a document's
+    entire multi-field score lives in ONE bucket shard across all fields.
+    Every field's pruned posting rows union into one mapInPandas pass per
+    (query, shard) — ``scoring_shards`` sets the fanout — whose kernel
+    scores all fields and emits its local top-k; ``topk_merge_global``
+    ranks the k×shards survivors. Exact: local top-k under the global
+    ranking key restricted to disjoint shards can never drop a global
+    top-k doc. With strategy='bmw' the kernel runs a single block-max
+    WAND walk across all fields' cursors (per-cursor boost·idf weight,
+    avgdl, tombstones)."""
     meta = load_multifield_meta(out_dir)
     fields: dict[str, float] = meta["fields"]
     if default_field is None:
@@ -669,100 +655,17 @@ def bm25_topk_multifield(
         "the shared shard mapping requires one bucket geometry"
     )
     any_meta = next(iter(sub_metas.values()))
-    n_buckets = -(-any_meta["n_docs"] // any_meta["bucket_size"])
-    if distribute is None:
-        distribute = "fused" if n_buckets >= 32 else "query"
-
-    if distribute == "fused":
-        # Round-5 (verdict #6 / ROADMAP #4): score every field in ONE
-        # kernel per (query, shard) — k rows out per group instead of the
-        # full candidate set, no cross-field agg stage, and with
-        # strategy='bmw' a single block-max WAND walk across all fields'
-        # cursors (per-cursor boost·idf weight, avgdl, tombstones).
-        if strategy == "bmw":
-            for f_name, m in sub_metas.items():
-                if not m.get("bmw_safe", True):
-                    raise ValueError(
-                        f"bmw strategy unavailable: sub-index field="
-                        f"{f_name} has stale block maxima; use 'taat' or "
-                        "compact"
-                    )
-        return _fused_bucket_topk(
-            spark, out_dir, per_field, fields, sub_metas, k, strategy,
-            scoring_shards(any_meta, spark.sparkContext.defaultParallelism),
-        )
-
-    if distribute == "bucket":
-        n_shards = scoring_shards(
-            any_meta, spark.sparkContext.defaultParallelism
-        )
-        cands = []
-        for f_name, qrows in sorted(per_field.items()):
-            sub_q = local_rows_df(
-                spark,
-                qrows, "query_id long, text string, fuzzy_k int"
-            )
-            c = bm25_shard_candidates(
-                spark, f"{out_dir}/field={f_name}", sub_q, n_shards,
-                strategy=strategy,
-            )
-            cands.append(
-                c.select(
-                    "query_id", "shard", "doc_id",
-                    (F.col("score") * F.lit(fields[f_name])).alias("score"),
+    if strategy == "bmw":
+        for f_name, m in sub_metas.items():
+            if not m.get("bmw_safe", True):
+                raise ValueError(
+                    f"bmw strategy unavailable: sub-index field="
+                    f"{f_name} has stale block maxima; use 'taat' or "
+                    "compact"
                 )
-            )
-        union = cands[0]
-        for c in cands[1:]:
-            union = union.unionByName(c)
-        # Weighted cross-field sum per doc — a hash agg (map-side combined,
-        # group = one doc), NOT a window; then local top-k per bounded
-        # (query, shard) partition.
-        total = union.groupBy("query_id", "shard", "doc_id").agg(
-            F.sum("score").alias("score")
-        )
-        w_local = Window.partitionBy("query_id", "shard").orderBy(
-            F.round(F.col("score"), ROUND_RANK).desc(), F.col("doc_id").asc()
-        )
-        local = (
-            total.withColumn("r", F.row_number().over(w_local))
-            .filter(F.col("r") <= k)
-            .select("query_id", "doc_id", "score")
-        )
-        return topk_merge_global(local, k).select(
-            "query_id", "doc_id", "score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-
-    scored = []
-    for f_name, qrows in sorted(per_field.items()):
-        sub_q = local_rows_df(
-            spark,
-            qrows, "query_id long, text string, fuzzy_k int"
-        )
-        s = bm25_topk_indexed(
-            spark, f"{out_dir}/field={f_name}", sub_q, k=2**62,
-            strategy=strategy,
-        )
-        scored.append(
-            s.select(
-                "query_id", "doc_id",
-                (F.col("score") * F.lit(fields[f_name])).alias("score"),
-            )
-        )
-    union = scored[0]
-    for s in scored[1:]:
-        union = union.unionByName(s)
-    total = union.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), ROUND_RANK).desc(), F.col("doc_id").asc()
-    )
-    return (
-        total.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", F.col("rank").cast("int").alias("rank"))
+    return _fused_bucket_topk(
+        spark, out_dir, per_field, fields, sub_metas, k, strategy,
+        scoring_shards(any_meta, spark.sparkContext.defaultParallelism),
     )
 
 

@@ -52,7 +52,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from dts.io import local_rows_df
 
 from dts.tokenizer import tokenize_text
@@ -288,7 +287,6 @@ def search_batch(
     queries: list[str],
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     broadcast_filter: bool = True,
     max_clauses: int | None = None,
     phrase_mode: str = "filter",
@@ -391,7 +389,7 @@ def search_batch(
     )
     return score_expanded_terms(
         spark, index_dir, qterms, n_queries=len(rows_by_q), k=k,
-        strategy=strategy, distribute=distribute, mode="mixed",
+        strategy=strategy, mode="mixed",
         m_map=m_map, broadcast_filter=broadcast_filter,
         all_terms=sorted({r[3] for r in rows}), syn_rows=syn,
         doc_filter=doc_filter, filter_qids=filter_qids,
@@ -535,7 +533,6 @@ def search_fields(
     strategy: str = "taat",
     default_field: str | None = None,
     max_clauses: int | None = None,
-    distribute: str | None = None,
     combine: str = "sum",
     tie_breaker: float = 0.0,
 ) -> DataFrame:
@@ -557,36 +554,25 @@ def search_fields(
     boost-weighted when combined. tie_breaker=1.0 degenerates to sum;
     the matching algebra (required/excluded/phrases) is unchanged.
 
-    Plan shape (``distribute``): ``"fused"`` — the default on
-    many-bucket indexes — runs ONE scoring job: every field's pruned
-    posting rows (clause/role-tagged, plus phrase synthetic rows) union
-    into one mapInPandas pass per (query, shard)
-    (multifield.fused_flags_topk) whose kernel scores all fields,
-    enforces the cross-field Σreq == m ∧ ¬excl algebra, and emits k rows
-    per group — no candidate emission, no hash-agg stage, no filter
-    join, no local window. ``"candidates"`` (small indexes / the
-    cross-check path): one flags-candidates job per touched field
-    (shard_candidates_mixed), hash-agg combine per (query, shard, doc),
-    shard-local top-k windows + the tiny global merge. Both are
-    rank-identical (tested); phrase constraints ride INSIDE the scoring
-    rows either way as synthetic clause rows (dts.phrase.phrase_syn_rows
-    — one positional job per field with phrases, all queries fused): a
-    required phrase is one more req-counted clause (m_total counts it),
-    an excluded phrase one more excl flag.
+    Plan shape — one execution path at every bucket count: ONE scoring
+    job in which every field's pruned posting rows (clause/role-tagged,
+    plus phrase synthetic rows) union into one mapInPandas pass per
+    (query, shard) (multifield.fused_flags_topk; ``scoring_shards`` sets
+    the fanout) whose kernel scores all fields, enforces the cross-field
+    Σreq == m ∧ ¬excl algebra, and emits k rows per group — no candidate
+    emission, no hash-agg stage, no filter join, no local window. Phrase
+    constraints ride INSIDE the scoring rows as synthetic clause rows
+    (dts.phrase.phrase_syn_rows — one positional job per field with
+    phrases, all queries fused): a required phrase is one more
+    req-counted clause (m_total counts it), an excluded phrase one more
+    excl flag.
 
     Returns the engine-standard (query_id, doc_id, score, rank) with
     query_id = position in ``queries``."""
-    from pyspark.sql import Window
-
     from dts.index_build import load_meta
-    from dts.multifield import load_multifield_meta
-    from dts.score_index import (
-        ROUND_RANK,
-        TOPK_SCHEMA,
-        scoring_shards,
-        shard_candidates_mixed,
-        topk_merge_global,
-    )
+    from dts.multifield import fused_flags_topk, load_multifield_meta
+    from dts.phrase import phrase_syn_rows
+    from dts.score_index import TOPK_SCHEMA, scoring_shards
 
     if isinstance(queries, str):
         queries = [queries]
@@ -603,8 +589,8 @@ def search_fields(
     # field → (phrase_id, query_id, clause, role, scored, text, slop,
     # boost) rows for
     # phrase_syn_rows; phrase clause ids start at the query's required
-    # clause count WITHIN that field (per-field kernels count distinct
-    # matched clauses independently, the combine sums across fields).
+    # clause count WITHIN that field (the fused kernel counts each
+    # field's matched clauses separately and sums across fields).
     ph_by_field: dict[str, list[tuple]] = {}
     for qid, text in enumerate(queries):
         pq = parse_query(text, fields=fields, default_field=default_field)
@@ -631,8 +617,6 @@ def search_fields(
     if not per_field_rows and not ph_by_field:
         return spark.createDataFrame([], TOPK_SCHEMA)
 
-    from dts.phrase import phrase_syn_rows
-
     touched = sorted(set(per_field_rows) | set(ph_by_field))
     sub_metas = {f: load_meta(f"{mf_dir}/field={f}") for f in touched}
     bucket_sizes = {m["bucket_size"] for m in sub_metas.values()}
@@ -641,96 +625,18 @@ def search_fields(
     )
     any_meta = next(iter(sub_metas.values()))
     n_shards = scoring_shards(any_meta, spark.sparkContext.defaultParallelism)
-    n_buckets = -(-any_meta["n_docs"] // any_meta["bucket_size"])
-    if distribute is None:
-        distribute = "fused" if n_buckets >= 32 else "candidates"
-
-    if distribute == "fused":
-        from dts.multifield import fused_flags_topk
-
-        syn_by_field = {}
-        for f_name in touched:
-            syn = phrase_syn_rows(
-                spark, f"{mf_dir}/field={f_name}",
-                ph_by_field.get(f_name, []), with_dl=False,
-            )
-            if syn is not None:
-                syn_by_field[f_name] = syn
-        return fused_flags_topk(
-            spark, mf_dir, per_field_rows, syn_by_field, fields,
-            sub_metas, m_total, k, n_shards,
-            combine=combine, tie_breaker=tie_breaker,
-        )
-
-    cands = []
+    syn_by_field = {}
     for f_name in touched:
-        rows = per_field_rows.get(f_name, [])
-        qterms = local_rows_df(
-            spark,
-            rows,
-            "query_id long, clause int, role int, term string, boost double",
-        )
         syn = phrase_syn_rows(
-            spark, f"{mf_dir}/field={f_name}", ph_by_field.get(f_name, []),
-            with_dl=False,
+            spark, f"{mf_dir}/field={f_name}",
+            ph_by_field.get(f_name, []), with_dl=False,
         )
-        c = shard_candidates_mixed(
-            spark, f"{mf_dir}/field={f_name}", qterms, n_shards,
-            all_terms=sorted({r[3] for r in rows}), syn_rows=syn,
-        )
-        cands.append(
-            c.select(
-                "query_id", "shard", "doc_id",
-                (F.col("score") * F.lit(fields[f_name])).alias("score"),
-                "req", "excl",
-            )
-        )
-    union = cands[0]
-    for c in cands[1:]:
-        union = union.unionByName(c)
-    if combine == "dismax":
-        # DisMax: one row per (query, shard, doc) per FIELD reaches the
-        # agg, so max = the best field and sum − max = the others.
-        total = (
-            union.groupBy("query_id", "shard", "doc_id")
-            .agg(
-                F.sum("score").alias("s_sum"),
-                F.max("score").alias("s_max"),
-                F.sum("req").alias("req"),
-                F.max("excl").alias("excl"),
-            )
-            .withColumn(
-                "score",
-                F.col("s_max")
-                + F.lit(float(tie_breaker))
-                * (F.col("s_sum") - F.col("s_max")),
-            )
-            .drop("s_sum", "s_max")
-        )
-    else:
-        total = union.groupBy("query_id", "shard", "doc_id").agg(
-            F.sum("score").alias("score"),
-            F.sum("req").alias("req"),
-            F.max("excl").alias("excl"),
-        )
-    req_df = local_rows_df(
-        spark,
-        [(q, m) for q, m in m_total.items()], "query_id long, m int"
-    )
-    total = total.join(F.broadcast(req_df), "query_id").filter(
-        (F.col("excl") == 0) & (F.col("req") == F.col("m"))
-    )
-
-    w_local = Window.partitionBy("query_id", "shard").orderBy(
-        F.round(F.col("score"), ROUND_RANK).desc(), F.col("doc_id").asc()
-    )
-    local = (
-        total.withColumn("r", F.row_number().over(w_local))
-        .filter(F.col("r") <= k)
-        .select("query_id", "doc_id", "score")
-    )
-    return topk_merge_global(local, k).select(
-        "query_id", "doc_id", "score", F.col("rank").cast("int").alias("rank")
+        if syn is not None:
+            syn_by_field[f_name] = syn
+    return fused_flags_topk(
+        spark, mf_dir, per_field_rows, syn_by_field, fields,
+        sub_metas, m_total, k, n_shards,
+        combine=combine, tie_breaker=tie_breaker,
     )
 
 
@@ -740,7 +646,6 @@ def search(
     query: str,
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     broadcast_filter: bool = True,
     max_clauses: int | None = None,
     phrase_mode: str = "filter",
@@ -750,6 +655,6 @@ def search(
     0). Returns the engine-standard (query_id, doc_id, score, rank)."""
     return search_batch(
         spark, index_dir, [query], k=k, strategy=strategy,
-        distribute=distribute, broadcast_filter=broadcast_filter,
+        broadcast_filter=broadcast_filter,
         max_clauses=max_clauses, phrase_mode=phrase_mode,
     )

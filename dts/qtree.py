@@ -285,7 +285,6 @@ def search_bool(
     index_dir: str,
     queries: str | list[str],
     k: int = 10,
-    distribute: str | None = None,
     broadcast_filter: bool = True,
     max_clauses: int | None = None,
 ) -> DataFrame:
@@ -350,7 +349,7 @@ def search_bool(
     )
     return score_expanded_terms(
         spark, index_dir, qterms, n_queries=len(live_qids), k=k,
-        strategy="taat", distribute=distribute, mode="tree",
+        strategy="taat", mode="tree",
         m_map=tree_map, broadcast_filter=broadcast_filter,
         all_terms=sorted({r[3] for r in rows}), syn_rows=syn,
     )

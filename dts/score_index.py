@@ -364,17 +364,9 @@ def _scorer_fn(
                     c = float(idf[i]) * _impact(i, tf, dl)
                 docs_parts.append(d)
                 contrib_parts.append(c)
-            if mode == "mixed_flags":
-                empty = pd.DataFrame(
-                    columns=["query_id", "doc_id", "score", "req", "excl"]
-                ).astype({
-                    "query_id": "int64", "doc_id": "int64",
-                    "score": "float64", "req": "int32", "excl": "int32",
-                })
-            else:
-                empty = pd.DataFrame(
-                    columns=["query_id", "doc_id", "score", "rank"]
-                ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"})
+            empty = pd.DataFrame(
+                columns=["query_id", "doc_id", "score", "rank"]
+            ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"})
             if not docs_parts:
                 return empty
             def _clause_sets(idxs_by_clause):
@@ -573,52 +565,6 @@ def _scorer_fn(
                 if res is None:
                     return empty
                 uniq, acc = res
-            elif mode == "mixed_flags":
-                # Candidate stage of the CROSS-FIELD boolean algebra
-                # (round-5 unified multifield search): emit EVERY doc that
-                # any clause touches — scoring rows accumulate, role-1
-                # membership is COUNTED per doc (req), role-2 membership
-                # flagged (excl) — and let the per-(query, shard, doc)
-                # combine downstream enforce Σreq == total required and
-                # excl == 0 across fields. No filtering here: a doc's
-                # required match may live in another FIELD's candidate
-                # rows; only its shard is fixed (shared doc_id space and
-                # bucket geometry).
-                role_vals = pdf["role"].to_numpy()
-                clause_vals = pdf["clause"].to_numpy()
-                score_mask = role_vals != 2
-                uniq = np.unique(np.concatenate(docs_parts))
-                acc = _accumulate_over(uniq, row_mask=score_mask)
-                req = np.zeros(len(uniq), dtype=np.int32)
-                for cl in np.unique(clause_vals[role_vals == 1]):
-                    s = _clause_sets(
-                        [np.flatnonzero((clause_vals == cl) & (role_vals == 1))]
-                    )[0]
-                    if len(s):
-                        pos = np.minimum(np.searchsorted(s, uniq), len(s) - 1)
-                        req += (s[pos] == uniq).astype(np.int32)
-                excl = np.zeros(len(uniq), dtype=np.int32)
-                neg_idx = np.flatnonzero(role_vals == 2)
-                if len(neg_idx):
-                    nd = np.unique(
-                        np.concatenate([docs_parts[i] for i in neg_idx])
-                    )
-                    pos = np.minimum(np.searchsorted(nd, uniq), len(nd) - 1)
-                    excl = (nd[pos] == uniq).astype(np.int32)
-                if deleted is not None:
-                    live = ~np.isin(uniq, deleted, assume_unique=True)
-                    uniq, acc, req, excl = (
-                        uniq[live], acc[live], req[live], excl[live]
-                    )
-                return pd.DataFrame(
-                    {
-                        "query_id": np.full(len(uniq), query_id, dtype=np.int64),
-                        "doc_id": uniq.astype(np.int64),
-                        "score": acc,
-                        "req": req,
-                        "excl": excl,
-                    }
-                )
             else:
                 uniq = np.unique(np.concatenate(docs_parts))
                 acc = np.zeros(len(uniq), dtype=np.float64)
@@ -790,13 +736,13 @@ def _local_query_term_rows(
     return out, len(rows), m_map
 
 
-def auto_distribute(
-    n_queries: int, n_buckets: int, n_docs: int | None = None
-) -> str:
-    """Measured crossover for the scoring distribution, calibrated across
-    THREE index sizes (scripts/calibrate_distribute.py, local[8], warm
-    best-of-2; cells are bucket_speedup = wall(query)/wall(bucket), >1 ⇒
-    bucket wins):
+def auto_distribute(n_queries: int, n_buckets: int) -> str:
+    """The engine's one choice of scoring distribution for single-index
+    scoring: ``"query"`` (one scoring group per query) or ``"bucket"``
+    (one group per (query, shard), then a global top-k merge). No caller
+    can override it. Measured crossover, calibrated across THREE index
+    sizes (local[8], warm best-of-2; cells are bucket_speedup =
+    wall(query)/wall(bucket), >1 ⇒ bucket wins):
 
     n_queries →            1     2     4     16    60    240
     120k docs / 30 bkts   0.95  0.74  0.66  0.55  0.59  0.41
@@ -812,8 +758,7 @@ def auto_distribute(
     the extra merge stage for nothing. The rule below is within 10% of the
     better manual mode at EVERY measured cell (worst misses: 960k/16q auto
     picks bucket at 0.96, 960k/60q auto picks query where bucket was 1.09).
-    ``n_docs`` is accepted for future refinement but carries no extra
-    signal today — n_buckets = n_docs/bucket_size already encodes size."""
+    Index size enters through n_buckets = n_docs/bucket_size."""
     return "bucket" if 2 <= n_queries <= 16 and n_buckets >= 32 else "query"
 
 
@@ -880,7 +825,6 @@ def _score_filtered(
     n_queries: int,
     k: int,
     strategy: str,
-    distribute: str | None,
     index_dir: str | None = None,
     mode: str = "or",
     m_map: dict[int, int] | None = None,
@@ -897,7 +841,8 @@ def _score_filtered(
     """Shared scoring tail: join filtered postings with broadcast stats +
     query terms, attach colocated tombstones (when ``index_dir`` has a
     deletes directory) and the optional ALLOW-list filter context, pick
-    the distribution mode, run the per-group scorer. A ``doc_filter``
+    the distribution mode (``auto_distribute``, looked up at call time),
+    run the per-group scorer. A ``doc_filter``
     carrying a ``query_id`` column is PER-QUERY (joined on (query_id,
     bucket)); ``filter_qids`` must then name the filtered queries so the
     rest of the fused batch stays unfiltered. ``syn_rows``: synthetic
@@ -932,8 +877,6 @@ def _score_filtered(
         dv_b = F.broadcast(dv) if broadcast_dv else dv
         joined = joined.join(dv_b, "bucket", "left")
     n_buckets = -(-meta["n_docs"] // meta["bucket_size"])
-    if distribute is None:
-        distribute = auto_distribute(n_queries, n_buckets, meta["n_docs"])
     if similarity not in ("bm25", "classic", "lmd"):
         raise ValueError(f"unknown similarity {similarity!r}")
     if similarity == "lmd" and syn_rows is not None:
@@ -959,14 +902,8 @@ def _score_filtered(
         similarity, after_map, dv_spec,
         total_tokens=float(meta.get("total_tokens", 0.0)),
     )
-    if distribute == "bucket":
-        # Cap group count: per-group applyInPandas overhead is real, so
-        # hash buckets into ~4×cores shards. Exactness is preserved under
-        # ANY partition of buckets (a doc's postings all live in its one
-        # bucket → one shard); contiguity is not required.
-        n_shards = max(
-            1, min(n_buckets, 4 * spark.sparkContext.defaultParallelism)
-        )
+    if auto_distribute(n_queries, n_buckets) == "bucket":
+        n_shards = scoring_shards(meta, spark.sparkContext.defaultParallelism)
         local = (
             joined.withColumn(
                 "shard", F.pmod(F.col("bucket"), F.lit(n_shards))
@@ -987,7 +924,6 @@ def score_expanded_terms(
     n_queries: int,
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
     all_terms: list[str] | None = None,
     doc_filter: DataFrame | None = None,
@@ -1047,7 +983,7 @@ def score_expanded_terms(
         raise ValueError("syn_rows (fused phrases) require strategy='taat'")
     return _score_filtered(
         spark, idx["meta"], postings, stats, qterms, n_queries, k,
-        strategy, distribute, index_dir, mode, m_map,
+        strategy, index_dir, mode, m_map,
         doc_filter=doc_filter, broadcast_filter=broadcast_filter,
         filter_qids=filter_qids, syn_rows=syn_rows, similarity=similarity,
     )
@@ -1059,7 +995,6 @@ def bm25_topk_indexed(
     queries: DataFrame,
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
     mode: str = "or",
     doc_filter: DataFrame | None = None,
@@ -1114,21 +1049,20 @@ def bm25_topk_indexed(
     explicitly, the distributed path via broadcast joins). Corpus-sized
     "query" tables belong in a join against the tf table, not here.
 
-    ``distribute``:
+    Distribution: the engine picks it (``auto_distribute``, from the
+    batch size and the index's bucket count); no caller can override it.
     - ``"query"``: one scoring group per query — every posting row of the
       query's terms ships to one task. Fine up to medium indexes.
-    - ``"bucket"``: one group per (query, bucket) — the CLUSTER-scale path.
-      Buckets are term-independent doc ranges, so a document's entire score
-      accumulates inside exactly one group; per-group local top-k is
-      therefore EXACT, and a tiny global window merge
-      (`topk_merge_global`) ranks the k×buckets candidates. A head term's
-      postings spread over all buckets instead of converging on one task —
-      the same property the salted build merge relies on.
-    - ``None`` (default): auto — ``auto_distribute``: "bucket" for small
-      batches (2–16 queries) over many-bucket indexes (measured crossover,
-      see auto_distribute's docstring), else "query".
+    - ``"bucket"``: one group per (query, shard of buckets) — the
+      CLUSTER-scale path, taken for small batches (2–16 queries) over
+      many-bucket indexes. Buckets are term-independent doc ranges, so a
+      document's entire score accumulates inside exactly one group;
+      per-group local top-k is therefore EXACT, and a tiny global window
+      merge (`topk_merge_global`) ranks the k×shards candidates. A head
+      term's postings spread over all shards instead of converging on one
+      task — the same property the salted build merge relies on.
 
-    Both modes, both strategies, are rank-identical (tested).
+    Both distributions, both strategies, are rank-identical (tested).
     """
     idx = load_index(spark, index_dir)
     meta = idx["meta"]
@@ -1148,7 +1082,7 @@ def bm25_topk_indexed(
         raise ValueError("search_after requires strategy='taat'")
     prep = _prepare_query_scan(
         spark, idx, index_dir, queries, max_isin_terms,
-        need_count=distribute is None,
+        need_count=True,
     )
     if prep is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
@@ -1164,7 +1098,7 @@ def bm25_topk_indexed(
         m_map = None
     return _score_filtered(
         spark, meta, postings, stats, qterms, n_queries, k, strategy,
-        distribute, index_dir, mode, m_map, doc_filter, broadcast_filter,
+        index_dir, mode, m_map, doc_filter, broadcast_filter,
         similarity=similarity, after_map=search_after,
     )
 
@@ -1217,213 +1151,14 @@ def _prepare_query_scan(
     return postings, stats, qterms, n_queries, m_map
 
 
-SHARD_CAND_SCHEMA = "query_id long, shard int, doc_id long, score double, rank int"
-
-
 def scoring_shards(meta: dict, parallelism: int) -> int:
-    """The shared bucket→shard fanout rule (also used by _score_filtered's
-    bucket mode): cap group count at ~4×cores; exact under ANY partition
-    of buckets because a doc's postings all live in its one bucket."""
+    """The shared bucket→shard fanout rule (``_score_filtered``'s bucket
+    distribution and the fused multifield kernels): cap group count at
+    ~4×cores, because per-group pandas overhead is real. Exact under ANY
+    partition of buckets: a doc's postings all live in its one bucket, so
+    its whole score accumulates in one shard."""
     n_buckets = -(-meta["n_docs"] // meta["bucket_size"])
     return max(1, min(n_buckets, 4 * parallelism))
-
-
-def bm25_shard_candidates(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    n_shards: int,
-    strategy: str = "taat",
-    max_isin_terms: int = MAX_ISIN_TERMS,
-) -> DataFrame:
-    """(query_id, shard, doc_id, score): FULL per-shard candidate scores —
-    no top-k truncation — with shard = pmod(bucket, n_shards). Every group
-    is bounded by its shard's doc range (never corpus-sized), and a doc's
-    entire score accumulates inside exactly one group (bucket-colocated
-    postings), in the engine's fixed ascending-(term, bucket) order — so
-    downstream merges (multi-field weighted sums) stay bit-identical to a
-    single-group scoring. The multifield caller relies on sub-indexes
-    sharing doc_ids AND bucket_size, which makes the shard mapping
-    identical across fields."""
-    idx = load_index(spark, index_dir)
-    meta = idx["meta"]
-    if strategy == "bmw" and not meta.get("bmw_safe", True):
-        raise ValueError(
-            "bmw strategy unavailable on a merged index with stale block "
-            "maxima; use strategy='taat' or compact first."
-        )
-    prep = _prepare_query_scan(
-        spark, idx, index_dir, queries, max_isin_terms, need_count=False
-    )
-    empty = "query_id long, shard int, doc_id long, score double"
-    if prep is None:
-        return spark.createDataFrame([], empty)
-    postings, stats, qterms, _, _ = prep
-    joined = postings.join(F.broadcast(stats), "term").join(
-        F.broadcast(qterms), "term"
-    )
-    if has_deletes(index_dir):
-        joined = join_deletes(joined, spark, index_dir, meta)
-    joined = joined.withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
-    )
-    scorer = _scorer_fn(
-        meta["n_docs"], meta["avgdl"], 2**62, strategy, meta["block_size"],
-    )
-
-    # repartition + mapInPandas with partition-level grouping instead of
-    # applyInPandas: with n_queries × n_shards groups each emitting its
-    # FULL candidate set, the per-group Arrow batch overhead of
-    # FlatMapGroupsInPandas dominates (measured ~7 ms/group at 1,280
-    # groups on the 480k index — 8 s of pure overhead). Hash-partitioning
-    # on the group key keeps every group whole within one partition; the
-    # pandas groupby inside costs microseconds per group.
-    n_parts = max(1, 2 * spark.sparkContext.defaultParallelism)
-    src = joined.repartition(n_parts, "query_id", "shard")
-
-    def score_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for (_, sh), g in pdf.groupby(["query_id", "shard"], sort=False):
-            out = scorer(g)
-            out.insert(1, "shard", np.int32(sh))
-            yield out
-
-    return src.mapInPandas(score_partition, SHARD_CAND_SCHEMA).drop("rank")
-
-
-SHARD_FLAGS_SCHEMA = (
-    "query_id long, shard int, doc_id long, score double, req int, excl int"
-)
-
-
-def shard_candidates_mixed(
-    spark: SparkSession,
-    index_dir: str,
-    qterms: DataFrame,
-    n_shards: int,
-    all_terms: list[str] | None = None,
-    max_isin_terms: int = MAX_ISIN_TERMS,
-    syn_rows: DataFrame | None = None,
-) -> DataFrame:
-    """FULL per-shard candidates WITH boolean flags for role-typed clause
-    rows (query_id, clause, role, term): (query_id, shard, doc_id, score,
-    req, excl) where score sums the role≠2 contributions, req counts the
-    doc's matched role-1 clauses and excl flags role-2 membership. The
-    cross-FIELD combine (dts.parser.search_fields) unions these per field,
-    hash-aggregates per (query, shard, doc) and enforces Σreq == total
-    required ∧ excl == 0 — the whole MUST/MUST_NOT algebra in the same
-    one-candidates-job-per-field shape as the bounded multifield merge.
-    ``syn_rows`` (dts.phrase.phrase_syn_rows): this field's phrase
-    constraints as synthetic clause rows — a required phrase req-counts,
-    an excluded one excl-flags, right inside this field's one candidates
-    job. Same shard mapping contract as bm25_shard_candidates."""
-    idx = load_index(spark, index_dir)
-    meta = idx["meta"]
-    scan = idx["postings"].select(*POSTING_SCORE_COLS)
-    if all_terms is not None:
-        if not all_terms and syn_rows is None:
-            return spark.createDataFrame([], SHARD_FLAGS_SCHEMA)
-        postings = term_filter(scan, all_terms, max_isin_terms)
-        stats = term_filter(
-            idx["term_stats"], all_terms, max_isin_terms
-        ).select("term", "df", "cf")
-    else:
-        postings, stats, _ = _filter_by_qterms(
-            idx, scan, qterms, max_isin_terms
-        )
-        if postings is None and syn_rows is not None:
-            postings = term_filter(scan, [], max_isin_terms)
-            stats = idx["term_stats"].filter(F.lit(False)).select(
-                "term", "df", "cf"
-            )
-    if postings is None:
-        return spark.createDataFrame([], SHARD_FLAGS_SCHEMA)
-    joined = postings.join(F.broadcast(stats), "term").join(
-        F.broadcast(qterms), "term"
-    )
-    if has_deletes(index_dir):
-        joined = join_deletes(joined, spark, index_dir, meta)
-    if syn_rows is not None:
-        joined = joined.unionByName(syn_rows, allowMissingColumns=True)
-    joined = joined.withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
-    )
-    scorer = _scorer_fn(
-        meta["n_docs"], meta["avgdl"], 2**62, "taat", meta["block_size"],
-        mode="mixed_flags",
-    )
-    n_parts = max(1, 2 * spark.sparkContext.defaultParallelism)
-    src = joined.repartition(n_parts, "query_id", "shard")
-
-    def score_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for (_, sh), g in pdf.groupby(["query_id", "shard"], sort=False):
-            out = scorer(g)
-            out.insert(1, "shard", np.int32(sh))
-            yield out
-
-    return src.mapInPandas(score_partition, SHARD_FLAGS_SCHEMA)
-
-
-_RESULT_CACHE: dict[tuple, list] = {}
-_RESULT_CACHE_CAP = 64
-
-
-def bm25_topk_cached(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    strategy: str = "taat",
-    distribute: str | None = None,
-    mode: str = "or",
-) -> DataFrame:
-    """Process-level result cache over ``bm25_topk_indexed`` — the hot
-    dashboard/repeated-query path. Key = (application, index_dir, meta
-    REVISION, the frozen query rows, k, strategy, distribute, mode); every
-    index mutation (merge / delete / compact) bumps the revision counter
-    via save_meta, so the key self-invalidates even when two mutations
-    land within one filesystem-mtime tick (round-4 ADVICE). Results are
-    materialized rows (query batches are client-sized by the
-    bm25_topk_indexed contract, so a cached entry is k×queries rows);
-    FIFO eviction at {cap} entries.""".format(cap=_RESULT_CACHE_CAP)
-    qrows = tuple(
-        sorted(
-            (int(r["query_id"]), r["text"], int(r["fuzzy_k"] or 0))
-            for r in queries.withColumn(
-                "fuzzy_k",
-                F.col("fuzzy_k") if "fuzzy_k" in queries.columns else F.lit(0),
-            ).select("query_id", "text", "fuzzy_k").collect()
-        )
-    )
-    key = (
-        spark.sparkContext.applicationId,
-        index_dir,
-        index_revision(index_dir),
-        qrows, k, strategy, distribute, mode,
-    )
-    if key not in _RESULT_CACHE:
-        rows = [
-            (int(r["query_id"]), int(r["doc_id"]), float(r["score"]), int(r["rank"]))
-            for r in bm25_topk_indexed(
-                spark,
-                index_dir,
-                spark.createDataFrame(
-                    list(qrows), "query_id long, text string, fuzzy_k int"
-                ),
-                k=k, strategy=strategy, distribute=distribute, mode=mode,
-            ).collect()
-        ]
-        if len(_RESULT_CACHE) >= _RESULT_CACHE_CAP:
-            _RESULT_CACHE.pop(next(iter(_RESULT_CACHE)))
-        _RESULT_CACHE[key] = rows
-    return spark.createDataFrame(_RESULT_CACHE[key], TOPK_SCHEMA)
 
 
 def match_counts_indexed(

@@ -153,7 +153,6 @@ def bm25_topk_synonyms(
     queries: DataFrame,
     synonyms: dict[str, list[str]],
     k: int = 10,
-    distribute: str | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
 ) -> DataFrame:
     """Top-k BM25 where each query token expands through ``synonyms`` at
@@ -194,7 +193,6 @@ def bm25_topk_synonyms(
         qterms,
         n_queries=len(rows),
         k=k,
-        distribute=distribute,
         max_isin_terms=max_isin_terms,
         all_terms=sorted({t for _, t in qterm_rows}),
         syn_rows=syn,

@@ -408,7 +408,6 @@ def _budgeted_scored_rewrite(
     n_queries: int,
     k: int,
     strategy: str,
-    distribute: str | None,
     max_isin_terms: int,
     max_clauses: int,
     on_too_many: str,
@@ -427,7 +426,7 @@ def _budgeted_scored_rewrite(
         return score_expanded_terms(
             spark, index_dir,
             expanded.select(F.col("wq_id").alias("query_id"), "term"),
-            n_queries, k=k, strategy=strategy, distribute=distribute,
+            n_queries, k=k, strategy=strategy,
             max_isin_terms=max_isin_terms, all_terms=terms,
         )
     if on_too_many == "error":
@@ -458,7 +457,7 @@ def _budgeted_scored_rewrite(
             score_expanded_terms(
                 spark, index_dir,
                 under.select(F.col("wq_id").alias("query_id"), "term"),
-                n_under, k=k, strategy=strategy, distribute=distribute,
+                n_under, k=k, strategy=strategy,
                 max_isin_terms=max_isin_terms, all_terms=under_terms,
             )
         )
@@ -474,7 +473,6 @@ def bm25_topk_regex(
     patterns: DataFrame,
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
     max_clauses: int = MAX_CLAUSES,
     on_too_many: str = "constant",
@@ -488,7 +486,7 @@ def bm25_topk_regex(
     return _budgeted_scored_rewrite(
         spark, index_dir,
         expanded.select(F.col("rq_id").alias("wq_id"), "term"), terms,
-        patterns.count(), k, strategy, distribute, max_isin_terms,
+        patterns.count(), k, strategy, max_isin_terms,
         max_clauses, on_too_many,
     )
 
@@ -648,7 +646,6 @@ def bm25_topk_wildcard(
     patterns: DataFrame,
     k: int = 10,
     strategy: str = "taat",
-    distribute: str | None = None,
     max_isin_terms: int = MAX_ISIN_TERMS,
     max_clauses: int = MAX_CLAUSES,
     on_too_many: str = "constant",
@@ -666,7 +663,7 @@ def bm25_topk_wildcard(
     expanded, terms = _expand(spark, index_dir, patterns)
     return _budgeted_scored_rewrite(
         spark, index_dir, expanded, terms, patterns.count(), k, strategy,
-        distribute, max_isin_terms, max_clauses, on_too_many,
+        max_isin_terms, max_clauses, on_too_many,
     )
 
 

@@ -270,31 +270,14 @@ def main() -> None:
     )
     sections.append(
         (
-            "Multifield bounded merge (round 4, final AQE plan)",
-            "Per-field full candidates from mapInPandas over "
-            "(query, bucket-shard) partitions, weighted cross-field sum as a "
-            "hash agg per (query, shard, doc), local top-k in windows "
-            "partitioned by (query_id, shard) — every window partition "
-            "bounded by its shard's doc range — then the tiny k×shards "
-            "global merge window. The old plan pushed every candidate "
-            "through one window partition per query.",
-            plan_of(
-                bm25_topk_multifield(spark, mf_dir, mfq, k=5, distribute="bucket"),
-                executed=True,
-            ),
-        )
-    )
-
-    sections.append(
-        (
-            "Multifield FUSED kernel (round 5, final AQE plan)",
+            "Multifield fused kernel (final AQE plan)",
             "One mapInPandas pass per (query, bucket-shard) over the UNION "
-            "of every field's pruned posting rows — k rows out per group; "
-            "the per-field full-candidate emission and the cross-field hash "
-            "agg of the round-4 plan are gone. The only aggregation left "
-            "after the kernel is the tiny k×shards global merge window.",
+            "of every field's pruned posting rows — k rows out per group, "
+            "no per-field candidate emission and no cross-field hash agg. "
+            "The only aggregation after the kernel is the tiny k×shards "
+            "global merge window.",
             plan_of(
-                bm25_topk_multifield(spark, mf_dir, mfq, k=5, distribute="fused"),
+                bm25_topk_multifield(spark, mf_dir, mfq, k=5),
                 executed=True,
             ),
         )
@@ -304,11 +287,11 @@ def main() -> None:
     sections.append(
         (
             "Unified field-scoped query string (round 5, search_fields)",
-            "Cross-field MUST through the flags-candidates stage: one "
-            "mapInPandas job per field emitting (score, req, excl) per doc, "
-            "a hash agg per (query, shard, doc) enforcing the boolean "
-            "algebra, shard-local top-k windows, global merge. No per-clause "
-            "doc-set jobs anywhere in the plan.",
+            "Cross-field MUST in the same fused kernel shape: one "
+            "mapInPandas pass per (query, bucket-shard) over every field's "
+            "role-tagged posting rows, enforcing the boolean algebra and "
+            "emitting k rows per group, then the global merge window. No "
+            "per-clause doc-set jobs anywhere in the plan.",
             plan_of(
                 search_fields(
                     spark, mf_dir, ["path:doc +fast scan"], k=5,

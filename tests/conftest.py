@@ -32,3 +32,42 @@ def queries_pd() -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def docs_sdf(spark, corpus_pd):
     return spark.createDataFrame(corpus_pd).cache()
+
+
+@pytest.fixture
+def force_distribute(monkeypatch):
+    """``force_distribute(mode)`` pins the single-index scoring
+    distribution ("query" or "bucket") for the rest of the test. The
+    engine picks it in ``dts.score_index.auto_distribute``, which the
+    scoring tail looks up at call time, so the patch reaches every entry
+    point."""
+    import dts.score_index as si
+
+    def _force(mode: str) -> None:
+        monkeypatch.setattr(si, "auto_distribute", lambda *_: mode)
+
+    return _force
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), number of Spark jobs fn launched): the
+    call runs under its own job group, whose jobs the status tracker
+    lists. The previous group (if any) is restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+
+    def _count(fn):
+        saved = [sc.getLocalProperty(k) for k in keys]
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for k, v in zip(keys, saved):
+                sc.setLocalProperty(k, v)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return _count

@@ -43,13 +43,16 @@ def _cases(corpus_pd):
 
 
 @pytest.mark.parametrize("distribute", ["query", "bucket"])
-def test_and_mode_vs_oracle(spark, and_index, corpus_pd, oracle, distribute):
+def test_and_mode_vs_oracle(
+    spark, and_index, corpus_pd, oracle, distribute, force_distribute
+):
+    force_distribute(distribute)
     cases = _cases(corpus_pd)
     q = spark.createDataFrame(
         cases, "query_id long, text string, fuzzy_k int"
     )
     got = bm25_topk_indexed(
-        spark, and_index, q, k=10, mode="and", distribute=distribute
+        spark, and_index, q, k=10, mode="and"
     ).toPandas()
     assert 2 not in set(got["query_id"])  # absent clause matched nothing
     for qid, text, fk in cases:
@@ -108,46 +111,6 @@ def test_and_mode_distributed_path(
         assert np.array_equal(
             g["score"].to_numpy(), np.array([s for *_, s in want])
         ), (text, "bit identity")
-
-
-def test_result_cache_hit_and_invalidation(spark, docs_sdf, corpus_pd, tmp_path):
-    """Cached results == fresh results; a repeat call serves from cache
-    (no new scoring job); delete_docs rewrites meta.json, which must
-    invalidate the entry so post-delete results exclude tombstones."""
-    import shutil
-
-    from dts import score_index as si
-    from dts.delete import delete_docs
-    from dts.index_build import build_index
-    from dts.score_index import bm25_topk_cached
-
-    d = str(tmp_path / "cacheidx")
-    build_index(spark, docs_sdf, d, bucket_size=64, block_size=16)
-    toks = tokenize_text(corpus_pd["content"].iloc[20])
-    q = spark.createDataFrame(
-        [(0, " ".join(toks[:2]), 0)], "query_id long, text string, fuzzy_k int"
-    )
-    si._RESULT_CACHE.clear()
-    first = bm25_topk_cached(spark, d, q, k=20).toPandas()
-    assert len(si._RESULT_CACHE) == 1
-    fresh = bm25_topk_indexed(spark, d, q, k=20).toPandas()
-    cols = ["query_id", "doc_id", "rank"]
-    assert first[cols].sort_values(cols).values.tolist() == \
-        fresh[cols].sort_values(cols).values.tolist()
-
-    # hit: scoring path not consulted (sabotage the index files — a real
-    # re-score would now fail; the cached entry must still serve)
-    shutil.rmtree(f"{d}/postings")
-    again = bm25_topk_cached(spark, d, q, k=20).toPandas()
-    assert again[cols].sort_values(cols).values.tolist() == \
-        first[cols].sort_values(cols).values.tolist()
-    # rebuild so the post-delete re-score below has an index to read
-    build_index(spark, docs_sdf, d, bucket_size=64, block_size=16)
-
-    victim = int(first["doc_id"].iloc[0])
-    delete_docs(spark, d, [victim])
-    after = bm25_topk_cached(spark, d, q, k=20).toPandas()
-    assert victim not in set(after["doc_id"].astype(int))
 
 
 @pytest.fixture(scope="module")

@@ -58,14 +58,16 @@ def _queries(spark, corpus_pd, n=6):
     ("taat", "query"), ("taat", "bucket"), ("bmw", "query"),
 ])
 def test_tombstone_masks_topk(
-    spark, del_index, corpus_pd, oracle_full, strategy, distribute
+    spark, del_index, corpus_pd, oracle_full, strategy, distribute,
+    force_distribute,
 ):
     """Tombstone phase: deleted docs never appear, ranks re-close over
     live docs, scores keep FULL-corpus stats (bit-identical to the oracle
     scored on all docs then filtered before truncation)."""
+    force_distribute(distribute)
     texts, q = _queries(spark, corpus_pd)
     got = bm25_topk_indexed(
-        spark, del_index, q, k=10, strategy=strategy, distribute=distribute
+        spark, del_index, q, k=10, strategy=strategy
     ).toPandas()
     assert not set(got["doc_id"].astype(int)) & DELETED
     for i, text in enumerate(texts):
@@ -209,7 +211,7 @@ def test_merge_after_delete_compact_keeps_ids_stable(
 
 
 def test_mass_delete_queries_without_compaction(
-    spark, docs_sdf, corpus_pd, oracle_full, tmp_path
+    spark, docs_sdf, corpus_pd, oracle_full, tmp_path, force_distribute
 ):
     """Round-4: tombstones are colocated by bucket — no driver cap, so an
     index can carry an arbitrarily large tombstone set (here 60% of the
@@ -222,9 +224,8 @@ def test_mass_delete_queries_without_compaction(
     delete_docs(spark, d, sorted(dead))
     texts, q = _queries(spark, corpus_pd, n=4)
     for strategy, distribute in [("taat", "query"), ("taat", "bucket"), ("bmw", "query")]:
-        got = bm25_topk_indexed(
-            spark, d, q, k=10, strategy=strategy, distribute=distribute
-        ).toPandas()
+        force_distribute(distribute)
+        got = bm25_topk_indexed(spark, d, q, k=10, strategy=strategy).toPandas()
         assert not set(got["doc_id"].astype(int)) & dead, (strategy, distribute)
         for i, text in enumerate(texts):
             want = [

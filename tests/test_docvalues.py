@@ -265,7 +265,9 @@ def test_function_score_vs_replay(spark, dv_idx, corpus_pd, meta_pd):
         assert np.allclose(got["score"], [s for _, s in want], rtol=1e-9), (modifier, boost_mode)
 
 
-def test_function_score_missing_and_validation(spark, dv_idx, corpus_pd, docs_sdf):
+def test_function_score_missing_and_validation(
+    spark, dv_idx, corpus_pd, docs_sdf, force_distribute
+):
     import numpy as np
     import pytest as _pt
 
@@ -293,12 +295,14 @@ def test_function_score_missing_and_validation(spark, dv_idx, corpus_pd, docs_sd
     want = _fs_replay(oracle, gv, text, 2.0, "none", "sum", 7.0)
     assert list(got["doc_id"].astype(int)) == [d for d, _ in want]
     assert np.allclose(got["score"], [s for _, s in want], rtol=1e-9)
-    # both distribute modes identical
+    # both distributions identical
+    force_distribute("bucket")
     g2 = function_score_topk(
-        spark, dv_idx, q, "n_chars", k=10, distribute="bucket"
+        spark, dv_idx, q, "n_chars", k=10
     ).toPandas().sort_values("rank")
+    force_distribute("query")
     g1 = function_score_topk(
-        spark, dv_idx, q, "n_chars", k=10, distribute="query"
+        spark, dv_idx, q, "n_chars", k=10
     ).toPandas().sort_values("rank")
     assert list(g1["doc_id"]) == list(g2["doc_id"])
     assert np.array_equal(g1["score"].to_numpy(), g2["score"].to_numpy())

@@ -42,14 +42,14 @@ def _queries(spark, corpus_pd, n=5):
     ("taat", "query"), ("taat", "bucket"), ("bmw", "query"),
 ])
 def test_filtered_topk_vs_oracle(
-    spark, f_index, corpus_pd, oracle, strategy, distribute
+    spark, f_index, corpus_pd, oracle, strategy, distribute, force_distribute
 ):
+    force_distribute(distribute)
     keep = {int(d) for d in corpus_pd["doc_id"] if int(d) % 3 == 0}
     flt = spark.createDataFrame([(d,) for d in sorted(keep)], "doc_id long")
     texts, q = _queries(spark, corpus_pd)
     got = bm25_topk_indexed(
-        spark, f_index, q, k=10, strategy=strategy, distribute=distribute,
-        doc_filter=flt,
+        spark, f_index, q, k=10, strategy=strategy, doc_filter=flt,
     ).toPandas()
     assert set(got["doc_id"].astype(int)) <= keep
     for i, text in enumerate(texts):

@@ -63,17 +63,17 @@ def test_rank_identity_indexed(spark, index_dir, oracle, queries_pd, strategy):
 
 @pytest.mark.parametrize("strategy", ["taat", "bmw"])
 def test_bucket_distribution_rank_identity(
-    spark, index_dir, oracle, queries_pd, strategy
+    spark, index_dir, oracle, queries_pd, strategy, force_distribute
 ):
     """The cluster-scale (query, bucket) scoring path with global top-k
     merge returns exactly what per-query scoring returns (and the oracle)."""
+    force_distribute("bucket")
     queries_sdf = spark.createDataFrame(
         queries_pd[["query_id", "text", "fuzzy_k"]]
     )
     got = (
         bm25_topk_indexed(
             spark, index_dir, queries_sdf, k=10, strategy=strategy,
-            distribute="bucket",
         )
         .orderBy("query_id", "rank")
         .collect()
@@ -380,7 +380,9 @@ def test_persisted_trigram_table(spark, index_dir, oracle):
         )
 
 
-def test_auto_distribute_rule_and_rank_identity(spark, oracle, queries_pd, docs_sdf, tmp_path):
+def test_auto_distribute_rule_and_rank_identity(
+    spark, oracle, queries_pd, docs_sdf, tmp_path, force_distribute
+):
     """auto_distribute picks bucket only for small batches over many-bucket
     indexes; the auto path stays rank-identical when it picks bucket."""
     from dts.score_index import auto_distribute
@@ -391,6 +393,7 @@ def test_auto_distribute_rule_and_rank_identity(spark, oracle, queries_pd, docs_
     assert auto_distribute(60, 118) == "query"   # group overhead dominates
     assert auto_distribute(960, 118) == "query"
     assert auto_distribute(4, 2) == "query"      # nothing to shard
+    assert auto_distribute(4, 50) == "bucket"    # the index below
 
     d = str(tmp_path / "many_bucket_idx")
     build_index(spark, docs_sdf, d, bucket_size=4, block_size=16)  # 50 buckets
@@ -399,8 +402,9 @@ def test_auto_distribute_rule_and_rank_identity(spark, oracle, queries_pd, docs_
         bm25_topk_indexed(spark, d, q4, k=10)  # auto → bucket
         .orderBy("query_id", "rank").collect()
     )
+    force_distribute("query")
     got_query = (
-        bm25_topk_indexed(spark, d, q4, k=10, distribute="query")
+        bm25_topk_indexed(spark, d, q4, k=10)
         .orderBy("query_id", "rank").collect()
     )
     assert [(r.query_id, r.rank, r.doc_id, r.score) for r in got_auto] == [
@@ -506,9 +510,9 @@ def test_build_pool_failure_propagates_and_unpersists(
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_search_after_pagination(spark, index_dir, queries_pd):
+def test_search_after_pagination(spark, index_dir, queries_pd, force_distribute):
     """search_after page p == rows (p-1)k+1..pk of one deep top-(p·k)
-    query, ranks restarting at 1 — across both distribute modes."""
+    query, ranks restarting at 1 — across both distributions."""
     from dts.score_index import bm25_topk_indexed
 
     qdf = spark.createDataFrame(queries_pd.iloc[:4][["query_id", "text"]])
@@ -519,6 +523,7 @@ def test_search_after_pagination(spark, index_dir, queries_pd):
         .sort_values(["query_id", "rank"])
     )
     for dist in ("query", "bucket"):
+        force_distribute(dist)
         cursor = {}
         for qid, g in deep.groupby("query_id"):
             if len(g) > k:
@@ -526,8 +531,7 @@ def test_search_after_pagination(spark, index_dir, queries_pd):
                 cursor[int(qid)] = (float(row["score"]), int(row["doc_id"]))
         page2 = (
             bm25_topk_indexed(
-                spark, index_dir, qdf, k=k,
-                search_after=cursor, distribute=dist,
+                spark, index_dir, qdf, k=k, search_after=cursor,
             )
             .toPandas()
             .sort_values(["query_id", "rank"])

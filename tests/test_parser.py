@@ -393,13 +393,13 @@ def test_search_batch_phrases_fused_one_positional_job(
 
 
 def test_search_batch_phrases_bucket_distribute_identical(
-    spark, p_index, corpus_pd
+    spark, p_index, corpus_pd, force_distribute
 ):
-    """Synthetic phrase clause rows under distribute='bucket': the
+    """Synthetic phrase clause rows under the 'bucket' distribution: the
     per-(query, shard) kernels must see exactly their shards' phrase
     arrays (same colocation contract as tombstones), making local top-k
-    exact — rank- and score-identical to distribute='query'. Small
-    indexes auto-pick 'query', so force both explicitly."""
+    exact — rank- and score-identical to 'query'. Small indexes get
+    'query' from the engine, so force both."""
     import pandas as pd
 
     from dts.parser import search_batch
@@ -414,18 +414,15 @@ def test_search_batch_phrases_bucket_distribute_identical(
         f'"{toks3[1]} {toks3[2]}" +{toks0[0]}',
     ]
     for mode in ("filter", "scored"):
-        frames = {
-            dist: (
-                search_batch(
-                    spark, p_index, qs, k=10, phrase_mode=mode,
-                    distribute=dist,
-                )
+        frames = {}
+        for dist in ("query", "bucket"):
+            force_distribute(dist)
+            frames[dist] = (
+                search_batch(spark, p_index, qs, k=10, phrase_mode=mode)
                 .toPandas()
                 .sort_values(["query_id", "rank"])
                 .reset_index(drop=True)
             )
-            for dist in ("query", "bucket")
-        }
         cols = ["query_id", "doc_id", "rank"]
         assert (
             frames["query"][cols].values.tolist()

@@ -1,6 +1,6 @@
 """Nested boolean query trees (dts.qtree): grammar structure, Lucene
 BooleanQuery match/score semantics vs an independent set-based reference,
-and plan invariants (both distribute modes bit-identical, one job)."""
+and plan invariants (both scoring distributions bit-identical, one job)."""
 
 from __future__ import annotations
 
@@ -193,15 +193,19 @@ def test_tree_fuzzy_wild_phrase_leaves(spark, qt_index, oracle, corpus_pd):
         _check(spark, qt_index, oracle, corpus_pd, q)
 
 
-def test_tree_distribute_modes_identical(spark, qt_index, corpus_pd):
+def test_tree_distribute_modes_identical(
+    spark, qt_index, corpus_pd, force_distribute
+):
     toks = tokenize_text(corpus_pd["content"].iloc[0])[:3]
     q = f"{toks[0]} AND ({toks[1]} OR {toks[2]})"
+    force_distribute("query")
     a = (
-        search_bool(spark, qt_index, [q], k=10**6, distribute="query")
+        search_bool(spark, qt_index, [q], k=10**6)
         .toPandas().sort_values("doc_id")
     )
+    force_distribute("bucket")
     b = (
-        search_bool(spark, qt_index, [q], k=10**6, distribute="bucket")
+        search_bool(spark, qt_index, [q], k=10**6)
         .toPandas().sort_values("doc_id")
     )
     assert list(a["doc_id"]) == list(b["doc_id"])

@@ -48,7 +48,10 @@ def _classic_ref(corpus_pd, qterms, k=10):
 
 
 @pytest.mark.parametrize("distribute", ["query", "bucket"])
-def test_classic_matches_reference(spark, cls_idx, corpus_pd, distribute):
+def test_classic_matches_reference(
+    spark, cls_idx, corpus_pd, distribute, force_distribute
+):
+    force_distribute(distribute)
     text = " ".join(tokenize_text(corpus_pd["content"].iloc[0])[:3])
     q = spark.createDataFrame(
         [(0, text, 0)], "query_id long, text string, fuzzy_k int"
@@ -56,7 +59,6 @@ def test_classic_matches_reference(spark, cls_idx, corpus_pd, distribute):
     got = (
         bm25_topk_indexed(
             spark, cls_idx, q, k=10, similarity="classic",
-            distribute=distribute,
         )
         .toPandas()
         .sort_values("rank")
@@ -118,14 +120,17 @@ def _lmd_ref(corpus_pd, qterms, k=10, mu=2000.0):
 
 
 @pytest.mark.parametrize("distribute", ["query", "bucket"])
-def test_lmd_matches_reference(spark, cls_idx, corpus_pd, distribute):
+def test_lmd_matches_reference(
+    spark, cls_idx, corpus_pd, distribute, force_distribute
+):
+    force_distribute(distribute)
     text = " ".join(tokenize_text(corpus_pd["content"].iloc[0])[:3])
     q = spark.createDataFrame(
         [(0, text, 0)], "query_id long, text string, fuzzy_k int"
     )
     got = (
         bm25_topk_indexed(
-            spark, cls_idx, q, k=10, similarity="lmd", distribute=distribute,
+            spark, cls_idx, q, k=10, similarity="lmd",
         )
         .toPandas()
         .sort_values("rank")

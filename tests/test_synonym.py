@@ -95,12 +95,16 @@ def test_synonym_empty_map_matches_plain_topk(spark, syn_index, queries_pd):
     assert np.allclose(b["score"], s["score"])
 
 
-def test_synonym_bucket_distribute_identical(spark, syn_index, oracle, corpus_pd):
+def test_synonym_bucket_distribute_identical(
+    spark, syn_index, oracle, corpus_pd, force_distribute
+):
     t = tokenize_text(corpus_pd["content"].iloc[0])
     synonyms = {t[0]: [t[3]]}
     q = spark.createDataFrame([(0, f"{t[0]} {t[2]}")], "query_id long, text string")
-    a = bm25_topk_synonyms(spark, syn_index, q, synonyms, k=10, distribute="query").toPandas()
-    b = bm25_topk_synonyms(spark, syn_index, q, synonyms, k=10, distribute="bucket").toPandas()
+    force_distribute("query")
+    a = bm25_topk_synonyms(spark, syn_index, q, synonyms, k=10).toPandas()
+    force_distribute("bucket")
+    b = bm25_topk_synonyms(spark, syn_index, q, synonyms, k=10).toPandas()
     a = a.sort_values("rank").reset_index(drop=True)
     b = b.sort_values("rank").reset_index(drop=True)
     assert list(a["doc_id"]) == list(b["doc_id"])

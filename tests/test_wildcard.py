@@ -74,7 +74,8 @@ def test_counts_vs_oracle(spark, wc_index, oracle):
 
 
 @pytest.mark.parametrize("distribute", ["query", "bucket"])
-def test_topk_vs_oracle(spark, wc_index, oracle, distribute):
+def test_topk_vs_oracle(spark, wc_index, oracle, distribute, force_distribute):
+    force_distribute(distribute)
     pats = spark.createDataFrame(
         list(enumerate(PATTERNS)), "wq_id long, pattern string"
     )
@@ -82,8 +83,7 @@ def test_topk_vs_oracle(spark, wc_index, oracle, distribute):
     # and this test pins the SCORED rewrite semantics (budget behavior has
     # its own tests below).
     got = bm25_topk_wildcard(
-        spark, wc_index, pats, k=10, distribute=distribute,
-        max_clauses=10**9,
+        spark, wc_index, pats, k=10, max_clauses=10**9,
     ).toPandas()
     for i, p in enumerate(PATTERNS):
         want = oracle.score_terms(oracle.wildcard_expand(p), topk=10)
