@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from dts.io import local_rows_df
 
-from dts.codec import PackedPostings, decode_postings
+from dts.codec import decode_postings, packed_rows
 from dts.delete import mask_deleted_rows
 from dts.score_index import MAX_ISIN_TERMS, load_index, term_filter
 from dts.tokenizer import tokenize_text
@@ -45,22 +45,7 @@ def _decode_docs(rows: pd.DataFrame, block_size: int) -> np.ndarray:
     appear after incremental merges; their runs cover disjoint ascending
     doc ranges, so sorting runs by first doc yields a globally ascending
     (hence unique) concatenation."""
-    runs = []
-    for _, r in rows.iterrows():
-        p = PackedPostings(
-            n=int(r["n"]),
-            doc_blob=bytes(r["doc_blob"]),
-            tf_blob=bytes(r["tf_blob"]),
-            dl_blob=bytes(r["dl_blob"]),
-            block_last_doc=np.asarray(r["block_last_doc"], dtype=np.int64),
-            block_max_impact=np.asarray(r["block_max_impact"], dtype=np.float64),
-            doc_offs=np.asarray(r["doc_offs"], dtype=np.int32),
-            tf_offs=np.asarray(r["tf_offs"], dtype=np.int32),
-            dl_offs=np.asarray(r["dl_offs"], dtype=np.int32),
-            block_size=block_size,
-        )
-        docs, _, _ = decode_postings(p)
-        runs.append(docs)
+    runs = [decode_postings(p)[0] for p in packed_rows(rows, block_size)]
     runs.sort(key=lambda d: d[0] if len(d) else -1)
     return np.concatenate(runs) if runs else np.zeros(0, dtype=np.int64)
 

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dts.codec import POSTING_COLS, bm25_impact, decode_postings, packed_rows
+
 
 class CorruptIndexError(RuntimeError):
     pass
@@ -53,26 +55,14 @@ DECODE_SCHEMA = (
 
 def _decode_check_fn(bucket_size: int, block_size: int, avgdl: float,
                      check_bmw: bool):
-    from dts.codec import PackedPostings, bm25_impact, decode_postings
-
     def run(it):
         for pdf in it:
             rows = []
-            for i in range(len(pdf)):
-                term = pdf["term"].iat[i]
-                bucket = int(pdf["bucket"].iat[i])
-                p = PackedPostings(
-                    n=int(pdf["n"].iat[i]),
-                    doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                    tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                    dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                    block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                    block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                    doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                    tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                    dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                    block_size=block_size,
-                )
+            for term, bucket, p in zip(
+                pdf["term"].tolist(),
+                pdf["bucket"].tolist(),
+                packed_rows(pdf, block_size),
+            ):
                 d, tf, dl = decode_postings(p)
                 bad_order = int(np.sum(np.diff(d) <= 0)) if len(d) > 1 else 0
                 lo, hi = bucket * bucket_size, (bucket + 1) * bucket_size
@@ -124,11 +114,7 @@ def check_index(
         return report
     report["postings_readable"] = 0
     check_bmw = bool(meta.get("bmw_safe", True))
-    decoded = postings.select(
-        "term", "bucket", "n", "doc_blob", "tf_blob", "dl_blob",
-        "block_last_doc", "block_max_impact", "doc_offs", "tf_offs",
-        "dl_offs",
-    ).mapInPandas(
+    decoded = postings.select(*POSTING_COLS).mapInPandas(
         _decode_check_fn(
             meta["bucket_size"], meta["block_size"], meta["avgdl"],
             check_bmw,

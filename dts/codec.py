@@ -4,7 +4,12 @@ The reference keeps raw bytes in memory (no encoding, src/apm1.c:212-232);
 the north rule mandates docID-sorted, delta-encoded block-compressed
 posting lists. Everything here is vectorized numpy byte-twiddling — no
 per-element Python in encode or decode hot paths. This module is the only
-one that knows the wire format.
+one that knows the wire format: the posting-row columns and their types
+(``POSTING_FIELDS``/``POSTING_COLS``, from which the index's parquet schema
+and every posting scan's projection are built), the row writer
+(``encode_posting_rows``, used by build and compaction) and the one frame
+reader that turns posting rows back into ``PackedPostings``
+(``packed_rows``; every kernel that decodes postings goes through it).
 
 Wire format (one posting list = one `PackedPostings`):
 - postings are split into blocks of ``BLOCK_SIZE`` entries;
@@ -25,6 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 
 BLOCK_SIZE = 128
 K1 = 1.2
@@ -112,6 +118,56 @@ class PackedPostings:
 
     def __post_init__(self) -> None:
         check_codec(self.codec)
+
+
+# One posting row per (term, bucket): the row key, then the nine encoded
+# fields of its ``PackedPostings`` (Spark DDL types, parquet column order).
+_PACKED_FIELDS = (
+    ("n", "long"),
+    ("doc_blob", "binary"),
+    ("tf_blob", "binary"),
+    ("dl_blob", "binary"),
+    ("block_last_doc", "array<long>"),
+    ("block_max_impact", "array<double>"),
+    ("doc_offs", "array<int>"),
+    ("tf_offs", "array<int>"),
+    ("dl_offs", "array<int>"),
+)
+POSTING_FIELDS = (("term", "string"), ("bucket", "long")) + _PACKED_FIELDS
+POSTING_COLS = tuple(c for c, _ in POSTING_FIELDS)
+
+
+def packed_rows(
+    frame: pd.DataFrame, block_size: int = BLOCK_SIZE
+) -> list[PackedPostings | None]:
+    """The posting rows of ``frame`` as ``PackedPostings``, in row order.
+
+    Each of the nine encoded columns is pulled out of the frame once:
+    nine ``frame[col].iat[i]`` lookups per row cost several times the
+    rest of the row's construction. Rows whose ``doc_blob`` is null — the synthetic
+    ``_syn_*`` clause rows, which carry decoded arrays instead — map to
+    ``None``."""
+    n, doc, tf, dl, last, imp, doff, toff, loff = (
+        frame[c].tolist() for c, _ in _PACKED_FIELDS
+    )
+    null = frame["doc_blob"].isna().tolist()
+    return [
+        None
+        if null[i]
+        else PackedPostings(
+            n=int(n[i]),
+            doc_blob=bytes(doc[i]),
+            tf_blob=bytes(tf[i]),
+            dl_blob=bytes(dl[i]),
+            block_last_doc=np.asarray(last[i], dtype=np.int64),
+            block_max_impact=np.asarray(imp[i], dtype=np.float64),
+            doc_offs=np.asarray(doff[i], dtype=np.int32),
+            tf_offs=np.asarray(toff[i], dtype=np.int32),
+            dl_offs=np.asarray(loff[i], dtype=np.int32),
+            block_size=block_size,
+        )
+        for i in range(len(frame))
+    ]
 
 
 def encode_postings(
@@ -222,6 +278,37 @@ def encode_bucket_vectorized(
                 "dl_offs": (dl_off[bs] - dl_off[s]).astype(np.int32).tolist(),
             }
         )
+    return out
+
+
+def encode_posting_rows(
+    terms: np.ndarray,
+    bucket: int,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    term_bounds: np.ndarray,
+    avgdl: float,
+    block_size: int = BLOCK_SIZE,
+    positions: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """The posting rows of one bucket, in ``POSTING_COLS`` order: one row
+    per term of ``terms``, encoded by ``encode_bucket_vectorized`` from the
+    (term, doc_id)-sorted postings. With ``positions`` (every posting's
+    token offsets back to back) each row also carries its ``pos_blob``."""
+    out = pd.DataFrame(
+        encode_bucket_vectorized(doc_ids, tfs, dls, term_bounds, avgdl, block_size)
+    )
+    out.insert(0, "term", terms)
+    out.insert(1, "bucket", bucket)
+    if positions is not None:
+        # One delta+varint stream over the bucket, sliced per term row via
+        # the per-posting byte offsets.
+        blob, byte_offs = encode_positions(positions, tfs)
+        out["pos_blob"] = [
+            blob[byte_offs[s] : byte_offs[e]]
+            for s, e in zip(term_bounds[:-1], term_bounds[1:])
+        ]
     return out
 
 

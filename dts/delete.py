@@ -50,6 +50,8 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from dts.io import local_rows_df
@@ -137,6 +139,21 @@ def join_deletes(
     if int(meta.get("n_deleted") or 0) <= BROADCAST_DELETES_MAX:
         db = F.broadcast(db)
     return joined.join(db, "bucket", "left")
+
+
+def bucket_ids(frame: pd.DataFrame, col: str) -> np.ndarray:
+    """Reassemble a scoring group's bucket-colocated id arrays (``_del_ids``
+    from ``join_deletes``, or an allow list): buckets are disjoint
+    ascending doc ranges and each array is sorted, so the bucket-ordered
+    concatenation is globally sorted and unique. A bucket's array repeats
+    on each of its posting rows and counts once; nulls add nothing."""
+    per_bucket: dict[int, np.ndarray] = {}
+    for b, a in zip(frame["bucket"].tolist(), frame[col].tolist()):
+        if a is not None and len(a) and b not in per_bucket:
+            per_bucket[b] = np.asarray(a, dtype=np.int64)
+    if not per_bucket:
+        return np.zeros(0, dtype=np.int64)
+    return np.concatenate([per_bucket[b] for b in sorted(per_bucket)])
 
 
 def delete_docs(

@@ -35,7 +35,7 @@ EXPLAIN_SCHEMA = (
 def _explain_fn(n_docs: int, avgdl: float, block_size: int,
                 targets: dict[int, np.ndarray], similarity: str = "bm25",
                 total_tokens: float = 0.0):
-    from dts.codec import PackedPostings, bm25_impact, decode_postings
+    from dts.codec import bm25_impact, decode_postings, packed_rows
 
     def weight_impact(df: int, cf: int, tf: int, dl: int) -> float:
         """Per-(clause, doc) contribution under the selected similarity —
@@ -67,21 +67,13 @@ def _explain_fn(n_docs: int, avgdl: float, block_size: int,
                 {"query_id": "int64", "doc_id": "int64", "clause": "int32",
                  "tf": "int64", "dl": "int64", "df": "int64"}
             )
-        for _, r in pdf.iterrows():
-            p = PackedPostings(
-                n=int(r["n"]),
-                doc_blob=bytes(r["doc_blob"]),
-                tf_blob=bytes(r["tf_blob"]),
-                dl_blob=bytes(r["dl_blob"]),
-                block_last_doc=np.asarray(r["block_last_doc"], dtype=np.int64),
-                block_max_impact=np.asarray(
-                    r["block_max_impact"], dtype=np.float64
-                ),
-                doc_offs=np.asarray(r["doc_offs"], dtype=np.int32),
-                tf_offs=np.asarray(r["tf_offs"], dtype=np.int32),
-                dl_offs=np.asarray(r["dl_offs"], dtype=np.int32),
-                block_size=block_size,
-            )
+        for term, clause, df, cf, p in zip(
+            pdf["term"].tolist(),
+            pdf["clause"].tolist(),
+            pdf["df"].tolist(),
+            pdf["cf"].tolist(),
+            packed_rows(pdf, block_size),
+        ):
             docs, tfs, dls = decode_postings(p)
             if not len(docs):
                 continue
@@ -89,14 +81,13 @@ def _explain_fn(n_docs: int, avgdl: float, block_size: int,
             hit = docs[pos] == want
             if not np.any(hit):
                 continue
-            df, cf = int(r["df"]), int(r["cf"])
             for d, i in zip(want[hit], pos[hit]):
                 tf, dl = int(tfs[i]), int(dls[i])
                 contrib = weight_impact(df, cf, tf, dl)
                 rows["query_id"].append(query_id)
                 rows["doc_id"].append(int(d))
-                rows["clause"].append(int(r["clause"]))
-                rows["term"].append(r["term"])
+                rows["clause"].append(clause)
+                rows["term"].append(term)
                 rows["tf"].append(tf)
                 rows["dl"].append(dl)
                 rows["df"].append(df)

@@ -44,18 +44,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dts.codec import BLOCK_SIZE, CODEC, check_codec
+from dts.codec import (
+    BLOCK_SIZE,
+    CODEC,
+    POSTING_COLS,
+    POSTING_FIELDS,
+    check_codec,
+    packed_rows,
+)
+from dts.session import run_parallel
 from dts.tokenizer import tokenize_exploded
 
 DEFAULT_BUCKET_SIZE = 4096  # docs per bucket; at 10^12 docs → ~2.4e8 buckets
 
 TF_SCHEMA = "doc_id long, term string, tf long, dl long"
 TF_SCHEMA_POS = TF_SCHEMA + ", positions array<int>"
-POSTINGS_SCHEMA = (
-    "term string, bucket long, n long, doc_blob binary, tf_blob binary, "
-    "dl_blob binary, block_last_doc array<long>, block_max_impact array<double>, "
-    "doc_offs array<int>, tf_offs array<int>, dl_offs array<int>"
-)
+POSTINGS_SCHEMA = ", ".join(f"{c} {t}" for c, t in POSTING_FIELDS)
 # Positional variant: pos_blob holds each posting's token positions
 # (delta+varint, first absolute per posting — dts.codec.encode_positions);
 # per-posting boundaries are derivable from the decoded tfs, so no extra
@@ -171,44 +175,28 @@ def _encode_bucket_fn(
     block_size: int,
     positions: bool = False,
 ):
-    from dts.codec import encode_bucket_vectorized, encode_positions
+    from dts.codec import encode_posting_rows
 
     def encode_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
         terms = pdf["term"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy("int64")
-        tfs = pdf["tf"].to_numpy("int64")
-        bucket = int(pdf["bucket"].iloc[0])
         uniq, starts = np.unique(terms, return_index=True)
-        bounds = np.append(starts, len(terms))
-        rows = encode_bucket_vectorized(
-            doc_ids,
-            tfs,
+        return encode_posting_rows(
+            uniq,
+            int(pdf["bucket"].iloc[0]),
+            pdf["doc_id"].to_numpy("int64"),
+            pdf["tf"].to_numpy("int64"),
             pdf["dl"].to_numpy("int64"),
-            bounds,
+            np.append(starts, len(terms)),
             avgdl,
             block_size,
-        )
-        out = pd.DataFrame(rows)
-        out.insert(0, "term", uniq)
-        out.insert(1, "bucket", bucket)
-        if positions:
-            # One delta+varint stream over the bucket, sliced per term row
-            # via the per-posting byte offsets (posting order == row order
-            # after the (term, doc_id) sort).
-            flat = (
-                np.concatenate(
-                    [np.asarray(p, dtype=np.int64) for p in pdf["positions"]]
-                )
-                if len(pdf)
-                else np.zeros(0, dtype=np.int64)
+            # Posting order == row order after the (term, doc_id) sort.
+            np.concatenate(
+                [np.asarray(p, dtype=np.int64) for p in pdf["positions"]]
             )
-            blob, byte_offs = encode_positions(flat, tfs)
-            out["pos_blob"] = [
-                blob[byte_offs[bounds[t]] : byte_offs[bounds[t + 1]]]
-                for t in range(len(uniq))
-            ]
-        return out
+            if positions
+            else None,
+        )
 
     return encode_bucket
 
@@ -270,7 +258,6 @@ def build_index(
     (append) and compaction (tombstoned rows dropped), like doc_meta.
     """
     import time
-    from concurrent.futures import ThreadPoolExecutor
 
     stage_wall: dict[str, float] = {}
 
@@ -401,14 +388,9 @@ def build_index(
         # 14.0 / 15.7 / 15.5 s), while at latency-bound scale overlap wins
         # (~2 s of the 5k-doc build); 3 jobs in flight is the guide §2.6
         # sweet spot. The first failed job cancels the queued ones.
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [pool.submit(timed, n, fn) for n, fn in jobs]
-            try:
-                for fut in futures:
-                    fut.result()
-            except BaseException:
-                pool.shutdown(cancel_futures=True)
-                raise
+        run_parallel(
+            [lambda n=n, fn=fn: timed(n, fn) for n, fn in jobs], max_workers=3
+        )
 
         meta["stage_wall_sec"] = stage_wall
         if extra_meta:
@@ -545,8 +527,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         has_deletes,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     apply_deletes = has_deletes(index_dir)
     db_joined = None
     if apply_deletes:
@@ -578,45 +558,30 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         # exactly one run per (term, bucket), so per-row counting sums
         # exactly.
         def _delta(it):
-            from dts.codec import PackedPostings as _PP
-            from dts.codec import decode_postings as _dec
-
             for pdf in it:
                 terms, dfs, cfs = [], [], []
-                for i in range(len(pdf)):
-                    a = pdf["_del_ids"].iat[i]
+                for term, a, p in zip(
+                    pdf["term"].tolist(),
+                    pdf["_del_ids"].tolist(),
+                    packed_rows(pdf, block_size),
+                ):
                     if a is None:
                         continue
-                    darr = np.asarray(a, dtype=np.int64)
-                    p = _PP(
-                        n=int(pdf["n"].iat[i]),
-                        doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                        tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                        dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                        block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                        block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                        doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                        tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                        dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                        block_size=block_size,
+                    docs, tfs, _ = decode_postings(p)
+                    hit = np.isin(
+                        docs, np.asarray(a, dtype=np.int64), assume_unique=True
                     )
-                    docs, tfs, _ = _dec(p)
-                    hit = np.isin(docs, darr, assume_unique=True)
                     if hit.any():
-                        terms.append(pdf["term"].iat[i])
+                        terms.append(term)
                         dfs.append(int(hit.sum()))
                         cfs.append(int(tfs[hit].sum()))
                 yield pd.DataFrame(
                     {"term": terms, "df_d": dfs, "cf_d": cfs}
                 )
 
-        scan_cols = [
-            "term", "n", "doc_blob", "tf_blob", "dl_blob", "block_last_doc",
-            "block_max_impact", "doc_offs", "tf_offs", "dl_offs",
-        ]
         delta = (
             _bucket_filter(spark.read.parquet(f"{index_dir}/postings"))
-            .select("bucket", *scan_cols)
+            .select(*POSTING_COLS)
             .join(db_joined, "bucket")
             .mapInPandas(_delta, "term string, df_d long, cf_d long")
             .groupBy("term")
@@ -688,44 +653,31 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             swap_dirs.append("term_vectors")
 
     avgdl = meta["avgdl"]
+    cols = [*POSTING_COLS, *(["pos_blob"] if positional else [])]
 
     def compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        from dts.codec import (
-            PackedPostings,
-            decode_positions,
-            encode_bucket_vectorized,
-            encode_positions,
-        )
+        from dts.codec import decode_positions, encode_posting_rows
 
         bucket = int(pdf["bucket"].iloc[0])
+        n_rows = len(pdf)
+        pos_blobs = pdf["pos_blob"].tolist() if positional else [None] * n_rows
+        del_ids = (
+            pdf["_del_ids"].tolist() if "_del_ids" in pdf.columns
+            else [None] * n_rows
+        )
         per_term: dict[str, list] = {}
-        for i in range(len(pdf)):
-            p = PackedPostings(
-                n=int(pdf["n"].iat[i]),
-                doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                block_size=block_size,
-            )
+        for term, p, pos_blob, dead in zip(
+            pdf["term"].tolist(), packed_rows(pdf, block_size), pos_blobs,
+            del_ids,
+        ):
             run = decode_postings(p)
             if positional:
-                pos_flat, _ = decode_positions(
-                    bytes(pdf["pos_blob"].iat[i]), run[1]
-                )
+                pos_flat, _ = decode_positions(bytes(pos_blob), run[1])
                 run = (*run, pos_flat)
-            darr = (
-                np.asarray(pdf["_del_ids"].iat[i], dtype=np.int64)
-                if "_del_ids" in pdf.columns
-                and pdf["_del_ids"].iat[i] is not None
-                else None
-            )
-            if darr is not None and len(darr):
-                keep = ~np.isin(run[0], darr, assume_unique=True)
+            if dead is not None and len(dead):
+                keep = ~np.isin(
+                    run[0], np.asarray(dead, dtype=np.int64), assume_unique=True
+                )
                 if not keep.all():
                     if positional:
                         pos_keep = np.repeat(keep, run[1].astype(np.int64))
@@ -737,15 +689,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                         run = (run[0][keep], run[1][keep], run[2][keep])
                 if not len(run[0]):
                     continue  # every posting of this run was tombstoned
-            per_term.setdefault(pdf["term"].iat[i], []).append(run)
+            per_term.setdefault(term, []).append(run)
         terms = sorted(per_term)
         if not terms:  # the whole bucket was deleted
-            cols_out = [
-                "term", "bucket", "n", "doc_blob", "tf_blob", "dl_blob",
-                "block_last_doc", "block_max_impact", "doc_offs", "tf_offs",
-                "dl_offs",
-            ] + (["pos_blob"] if positional else [])
-            return pd.DataFrame({c: [] for c in cols_out})
+            return pd.DataFrame({c: [] for c in cols})
         d_parts, t_parts, l_parts, p_parts, bounds = [], [], [], [], [0]
         for t in terms:
             runs = sorted(per_term[t], key=lambda r: r[0][0] if len(r[0]) else -1)
@@ -758,32 +705,18 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
                     np.concatenate([r[3] for r in runs]).astype(np.int64)
                 )
             bounds.append(bounds[-1] + len(d))
-        all_tf = np.concatenate(t_parts)
-        rows = encode_bucket_vectorized(
+        return encode_posting_rows(
+            np.array(terms),
+            bucket,
             np.concatenate(d_parts),
-            all_tf,
+            np.concatenate(t_parts),
             np.concatenate(l_parts),
             np.asarray(bounds, dtype=np.int64),
             avgdl,
             block_size,
+            np.concatenate(p_parts) if positional else None,
         )
-        out = pd.DataFrame(rows)
-        out.insert(0, "term", np.array(terms))
-        out.insert(1, "bucket", bucket)
-        if positional:
-            blob, byte_offs = encode_positions(np.concatenate(p_parts), all_tf)
-            out["pos_blob"] = [
-                blob[byte_offs[bounds[t]] : byte_offs[bounds[t + 1]]]
-                for t in range(len(terms))
-            ]
-        return out
 
-    cols = [
-        "term", "bucket", "n", "doc_blob", "tf_blob", "dl_blob",
-        "block_last_doc", "block_max_impact", "doc_offs", "tf_offs", "dl_offs",
-    ]
-    if positional:
-        cols.append("pos_blob")
     postings = spark.read.parquet(f"{index_dir}/postings")
     src = postings.select(*cols)
     if apply_deletes:
@@ -804,10 +737,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # independent jobs over the PRE-swap directories — run them from one
     # thread pool (guide §2.6), then swap everything adjacently (a
     # strictly smaller crash window than the old progressive swaps).
-    para_jobs = [_write_postings] + (stat_jobs if apply_deletes else [])
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(j) for j in para_jobs]:
-            fut.result()
+    run_parallel(
+        [_write_postings] + (stat_jobs if apply_deletes else []), max_workers=3
+    )
     if apply_deletes:
         for d in swap_dirs:
             shutil.rmtree(f"{index_dir}/{d}")
@@ -817,14 +749,10 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     if apply_deletes:
         # trigram/reversed dictionaries re-derive from the SWAPPED
         # term_stats; the vocab count is parquet-footer metadata.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(write_trigrams, spark, index_dir)]
-            if os.path.isdir(f"{index_dir}/terms_rev"):
-                futs.append(
-                    pool.submit(write_reversed_terms, spark, index_dir)
-                )
-            for fut in futs:
-                fut.result()
+        dict_jobs = [lambda: write_trigrams(spark, index_dir)]
+        if os.path.isdir(f"{index_dir}/terms_rev"):
+            dict_jobs.append(lambda: write_reversed_terms(spark, index_dir))
+        run_parallel(dict_jobs, max_workers=2)
         meta["vocab_size"] = spark.read.parquet(
             f"{index_dir}/term_stats"
         ).count()

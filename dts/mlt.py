@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from dts.io import local_rows_df
 
+from dts.codec import POSTING_COLS
 from dts.score_index import ROUND_RANK, load_index, score_expanded_terms
 
 MLT_SCHEMA = "query_id long, doc_id long, score double, rank int"
@@ -45,39 +46,25 @@ def doc_term_vectors(
     block_size = meta["block_size"]
 
     def extract(it):
-        from dts.codec import PackedPostings, decode_postings
+        from dts.codec import decode_postings, packed_rows
 
         for pdf in it:
             out_doc, out_term, out_tf = [], [], []
-            for i in range(len(pdf)):
-                p = PackedPostings(
-                    n=int(pdf["n"].iat[i]),
-                    doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                    tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                    dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                    block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                    block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                    doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                    tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                    dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                    block_size=block_size,
-                )
+            for term, p in zip(
+                pdf["term"].tolist(), packed_rows(pdf, block_size)
+            ):
                 docs, tfs, _ = decode_postings(p)
                 hit = np.isin(docs, seed_arr, assume_unique=True)
                 if hit.any():
                     n_hit = int(hit.sum())
                     out_doc.extend(docs[hit].tolist())
-                    out_term.extend([pdf["term"].iat[i]] * n_hit)
+                    out_term.extend([term] * n_hit)
                     out_tf.extend(tfs[hit].tolist())
             yield pd.DataFrame(
                 {"doc_id": out_doc, "term": out_term, "tf": out_tf}
             )
 
-    scan = idx["postings"].select(
-        "term", "bucket", "n", "doc_blob", "tf_blob", "dl_blob",
-        "block_last_doc", "block_max_impact", "doc_offs", "tf_offs",
-        "dl_offs",
-    )
+    scan = idx["postings"].select(*POSTING_COLS)
     # bucket IN-list: postings files are written per bucket-group task, so
     # parquet min/max stats on `bucket` prune to the seeds' files.
     scan = scan.filter(F.col("bucket").isin([int(b) for b in buckets]))

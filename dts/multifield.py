@@ -42,30 +42,7 @@ from dts.score_index import (
     scoring_shards,
     topk_merge_global,
 )
-
-
-def _pack(g, i: int, st: dict):
-    """One posting row → PackedPostings with the owning field's geometry
-    (shared by the fused kernels; module-level so executor closures
-    resolve it by import)."""
-    import numpy as np
-
-    from dts.codec import PackedPostings
-
-    return PackedPostings(
-        n=int(g["n"].iat[i]),
-        doc_blob=bytes(g["doc_blob"].iat[i]),
-        tf_blob=bytes(g["tf_blob"].iat[i]),
-        dl_blob=bytes(g["dl_blob"].iat[i]),
-        block_last_doc=np.asarray(g["block_last_doc"].iat[i], dtype=np.int64),
-        block_max_impact=np.asarray(
-            g["block_max_impact"].iat[i], dtype=np.float64
-        ),
-        doc_offs=np.asarray(g["doc_offs"].iat[i], dtype=np.int32),
-        tf_offs=np.asarray(g["tf_offs"].iat[i], dtype=np.int32),
-        dl_offs=np.asarray(g["dl_offs"].iat[i], dtype=np.int32),
-        block_size=st["block_size"],
-    )
+from dts.session import run_parallel
 
 
 def _fused_scorer(field_stats: dict, k: int, strategy: str):
@@ -86,20 +63,9 @@ def _fused_scorer(field_stats: dict, k: int, strategy: str):
     import numpy as np
     import pandas as pd
 
-    from dts.codec import PackedPostings, decode_postings
-    from dts.score import B, K1
+    from dts.codec import bm25_impact, decode_postings, packed_rows
+    from dts.delete import bucket_ids
     from dts.wand import bmw_topk
-
-    def _bucket_ids(g: pd.DataFrame, col: str):
-        per: dict[int, np.ndarray] = {}
-        for b, a in zip(g["bucket"], g[col]):
-            if a is not None and int(b) not in per:
-                arr = np.asarray(a, dtype=np.int64)
-                if len(arr):
-                    per[int(b)] = arr
-        if not per:
-            return None
-        return np.concatenate([per[b] for b in sorted(per)])
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = int(pdf["query_id"].iloc[0])
@@ -112,18 +78,20 @@ def _fused_scorer(field_stats: dict, k: int, strategy: str):
                 st = field_stats[f_name]
                 g = g.sort_values(["term", "bucket"], kind="mergesort")
                 dead = (
-                    _bucket_ids(g, "_del_ids")
+                    bucket_ids(g, "_del_ids")
                     if "_del_ids" in g.columns
                     else None
                 )
                 dfv = g["df"].to_numpy(np.float64)
                 idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
-                for i in range(len(g)):
+                for term, w, p in zip(
+                    g["term"].tolist(), idf, packed_rows(g, st["block_size"])
+                ):
                     packs.append(
                         (
-                            f"{f_name}:{g['term'].iat[i]}",
-                            st["boost"] * float(idf[i]),
-                            _pack(g, i, st),
+                            f"{f_name}:{term}",
+                            st["boost"] * float(w),
+                            p,
                             st["avgdl"],
                             dead,
                         )
@@ -142,14 +110,12 @@ def _fused_scorer(field_stats: dict, k: int, strategy: str):
                 dfv = g["df"].to_numpy(np.float64)
                 idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
                 docs_parts, contrib_parts = [], []
-                for i in range(len(g)):
-                    d, tf, dl = decode_postings(_pack(g, i, st))
+                for w, p in zip(idf, packed_rows(g, st["block_size"])):
+                    d, tf, dl = decode_postings(p)
                     docs_parts.append(d)
-                    impact = (
-                        tf * (K1 + 1.0)
-                        / (tf + K1 * (1.0 - B + B * dl / st["avgdl"]))
+                    contrib_parts.append(
+                        float(w) * bm25_impact(tf, dl, st["avgdl"])
                     )
-                    contrib_parts.append(float(idf[i]) * impact)
                 if not docs_parts:
                     continue
                 uniq_f = np.unique(np.concatenate(docs_parts))
@@ -157,7 +123,7 @@ def _fused_scorer(field_stats: dict, k: int, strategy: str):
                 for d, c in zip(docs_parts, contrib_parts):
                     acc_f[np.searchsorted(uniq_f, d)] += c
                 dead = (
-                    _bucket_ids(g, "_del_ids")
+                    bucket_ids(g, "_del_ids")
                     if "_del_ids" in g.columns
                     else None
                 )
@@ -296,28 +262,16 @@ def _fused_flags_scorer(
     import numpy as np
     import pandas as pd
 
-    from dts.codec import decode_postings
-    from dts.score import B, K1
+    from dts.codec import bm25_impact, decode_postings, packed_rows
+    from dts.delete import bucket_ids
 
     empty = pd.DataFrame(columns=["query_id", "doc_id", "score"]).astype(
         {"query_id": "int64", "doc_id": "int64", "score": "float64"}
     )
 
-    def _bucket_ids(g: pd.DataFrame, col: str):
-        per: dict[int, np.ndarray] = {}
-        for b, a in zip(g["bucket"], g[col]):
-            if a is not None and int(b) not in per:
-                arr = np.asarray(a, dtype=np.int64)
-                if len(arr):
-                    per[int(b)] = arr
-        if not per:
-            return None
-        return np.concatenate([per[b] for b in sorted(per)])
-
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = int(pdf["query_id"].iloc[0])
         m = m_map.get(query_id, 0)
-        has_syn = "_syn_ids" in pdf.columns
         # Per field: candidate docs (ANY clause), scoring accumulation,
         # per-required-clause doc sets, excluded doc set — each masked by
         # that field's tombstones.
@@ -330,10 +284,6 @@ def _fused_flags_scorer(
                 continue
             st = field_stats[f_name]
             g = g.sort_values(["term", "bucket"], kind="mergesort")
-            syn_row = (
-                g["doc_blob"].isna().to_numpy() if has_syn
-                else np.zeros(len(g), dtype=bool)
-            )
             dfv = g["df"].to_numpy(np.float64)
             idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
             if "boost" in g.columns:
@@ -344,32 +294,28 @@ def _fused_flags_scorer(
             role_vals = g["role"].to_numpy()
             clause_vals = g["clause"].to_numpy()
             docs_parts, contribs = [], []
-            for i in range(len(g)):
-                if syn_row[i]:
+            for i, p in enumerate(packed_rows(g, st["block_size"])):
+                if p is None:
                     d = np.asarray(g["_syn_ids"].iat[i], dtype=np.int64)
                     tfs = g["_syn_tfs"].iat[i]
                     if tfs is None:
                         c = np.zeros(len(d), dtype=np.float64)
                     else:
-                        tf = np.asarray(tfs, dtype=np.float64)
-                        dl = np.asarray(g["_syn_dls"].iat[i], dtype=np.float64)
-                        c = float(idf[i]) * (
-                            tf * (K1 + 1.0)
-                            / (tf + K1 * (1.0 - B + B * dl / st["avgdl"]))
+                        c = float(idf[i]) * bm25_impact(
+                            np.asarray(tfs, dtype=np.float64),
+                            np.asarray(g["_syn_dls"].iat[i], dtype=np.float64),
+                            st["avgdl"],
                         )
                 else:
-                    d, tf, dl = decode_postings(_pack(g, i, st))
-                    c = float(idf[i]) * (
-                        tf * (K1 + 1.0)
-                        / (tf + K1 * (1.0 - B + B * dl / st["avgdl"]))
-                    )
+                    d, tf, dl = decode_postings(p)
+                    c = float(idf[i]) * bm25_impact(tf, dl, st["avgdl"])
                 docs_parts.append(d)
                 contribs.append(c)
             if not docs_parts:
                 continue
             uniq_f = np.unique(np.concatenate(docs_parts))
             dead = (
-                _bucket_ids(g, "_del_ids") if "_del_ids" in g.columns
+                bucket_ids(g, "_del_ids") if "_del_ids" in g.columns
                 else None
             )
             if dead is not None:
@@ -561,7 +507,6 @@ def build_multifield_index(
     own column) and run CONCURRENTLY from a small thread pool so one
     field's straggler tail back-fills with the next field's tasks
     (optimization guide §2.6) instead of serializing the builds."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def _one(col: str) -> None:
         build_index(
@@ -571,9 +516,7 @@ def build_multifield_index(
             **build_kwargs,
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_one, c) for c in fields]:
-            fut.result()
+    run_parallel([lambda c=c: _one(c) for c in fields], max_workers=2)
     meta = {"fields": {c: float(b) for c, b in fields.items()}}
     os.makedirs(out_dir, exist_ok=True)
     with open(f"{out_dir}/meta.json", "w") as f:
@@ -802,19 +745,23 @@ def _decoded_tf_rows(pruned: DataFrame, meta: dict) -> DataFrame:
     """(term, bucket, doc_id, tf) rows from coded posting rows — ONE
     mapInPandas decode pass; tombstones (``_del_ids``, bucket-colocated)
     are masked during the explode so dead docs never reach the agg."""
-    geom = {"block_size": int(meta["block_size"])}
+    block_size = int(meta["block_size"])
 
     def explode(batches):
         import numpy as np
         import pandas as pd
 
-        from dts.codec import decode_postings
+        from dts.codec import decode_postings, packed_rows
 
         for pdf in batches:
             outs = []
-            for i in range(len(pdf)):
-                d, tf, _dl = decode_postings(_pack(pdf, i, geom))
-                dead = pdf["_del_ids"].iat[i]
+            for term, bucket, dead, p in zip(
+                pdf["term"].tolist(),
+                pdf["bucket"].tolist(),
+                pdf["_del_ids"].tolist(),
+                packed_rows(pdf, block_size),
+            ):
+                d, tf, _dl = decode_postings(p)
                 if dead is not None:
                     arr = np.asarray(dead, dtype=np.int64)
                     if len(arr):
@@ -825,8 +772,8 @@ def _decoded_tf_rows(pruned: DataFrame, meta: dict) -> DataFrame:
                 outs.append(
                     pd.DataFrame(
                         {
-                            "term": pdf["term"].iat[i],
-                            "bucket": np.int32(pdf["bucket"].iat[i]),
+                            "term": term,
+                            "bucket": np.int32(bucket),
                             "doc_id": d.astype(np.int64),
                             "tf": tf.astype(np.int64),
                         }

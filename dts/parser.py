@@ -530,7 +530,6 @@ def search_fields(
     mf_dir: str,
     queries: str | list[str],
     k: int = 10,
-    strategy: str = "taat",
     default_field: str | None = None,
     max_clauses: int | None = None,
     combine: str = "sum",

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dts.codec import PackedPostings, decode_positions, decode_postings
+from dts.codec import decode_positions, decode_postings, packed_rows
 from dts.delete import mask_deleted_rows
 from dts.io import local_rows_df
 from dts.score_index import MAX_ISIN_TERMS, load_index, term_filter
@@ -31,21 +31,9 @@ from dts.tokenizer import tokenize_text
 PHRASE_SCHEMA = "phrase_id long, doc_id long, n_matches long"
 
 
-def _decode_row(row, block_size: int):
-    p = PackedPostings(
-        n=int(row["n"]),
-        doc_blob=bytes(row["doc_blob"]),
-        tf_blob=bytes(row["tf_blob"]),
-        dl_blob=bytes(row["dl_blob"]),
-        block_last_doc=np.asarray(row["block_last_doc"], dtype=np.int64),
-        block_max_impact=np.asarray(row["block_max_impact"], dtype=np.float64),
-        doc_offs=np.asarray(row["doc_offs"], dtype=np.int32),
-        tf_offs=np.asarray(row["tf_offs"], dtype=np.int32),
-        dl_offs=np.asarray(row["dl_offs"], dtype=np.int32),
-        block_size=block_size,
-    )
+def _decode_row(p, pos_blob: bytes):
     docs, tfs, dls = decode_postings(p)
-    pos_flat, bounds = decode_positions(bytes(row["pos_blob"]), tfs)
+    pos_flat, bounds = decode_positions(bytes(pos_blob), tfs)
     return docs, pos_flat, bounds, dls
 
 
@@ -55,7 +43,11 @@ def _concat_runs(rows: pd.DataFrame, block_size: int):
     ordering by first doc yields globally ascending docs). Returns
     (docs, flat_positions, bounds[n_docs+1], dls)."""
     decs = sorted(
-        (_decode_row(r, block_size) for _, r in rows.iterrows()),
+        map(
+            _decode_row,
+            packed_rows(rows, block_size),
+            rows["pos_blob"].tolist(),
+        ),
         key=lambda t: t[0][0] if len(t[0]) else -1,
     )
     docs = np.concatenate([d[0] for d in decs])

@@ -38,8 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dts.codec import PackedPostings, bm25_impact
-from dts.delete import has_deletes, join_deletes
+from dts.codec import POSTING_COLS, bm25_impact, packed_rows
+from dts.delete import bucket_ids, has_deletes, join_deletes
 from dts.fuzzy import build_vocab_struct, expand_fuzzy_local, expand_fuzzy_terms
 from dts.index_build import index_revision, load_meta
 from dts.io import local_rows_df
@@ -60,11 +60,9 @@ SYN_TERM_PREFIX = "￿￿"
 MAX_ISIN_TERMS = 10_000
 # BM25 scoring never reads pos_blob (positional indexes only): explicit
 # projection keeps the parquet scan and the applyInPandas transfer free of
-# position bytes.
-POSTING_SCORE_COLS = [
-    "term", "bucket", "n", "doc_blob", "tf_blob", "dl_blob",
-    "block_last_doc", "block_max_impact", "doc_offs", "tf_offs", "dl_offs",
-]
+# position bytes. A list, not the codec's tuple: pyarrow's dataset scanner
+# accepts only a list of column names.
+POSTING_SCORE_COLS = list(POSTING_COLS)
 
 
 def term_filter(
@@ -202,36 +200,21 @@ def _scorer_fn(
     disjunctive BM25 sums, AND only filters eligibility."""
     from dts.codec import decode_postings
 
-    def _bucket_ids(pdf: pd.DataFrame, col: str) -> np.ndarray:
-        """Reassemble a group's per-bucket id arrays: buckets are disjoint
-        ascending doc ranges and each array is sorted, so bucket-ordered
-        concatenation is globally sorted+unique. Nulls contribute nothing
-        (an empty result is meaningful for ALLOW lists: no member docs in
-        this group's buckets)."""
-        per_bucket: dict[int, np.ndarray] = {}
-        for b, a in zip(pdf["bucket"], pdf[col]):
-            if a is not None and int(b) not in per_bucket:
-                arr = np.asarray(a, dtype=np.int64)
-                if len(arr):
-                    per_bucket[int(b)] = arr
-        if not per_bucket:
-            return np.zeros(0, dtype=np.int64)
-        return np.concatenate([per_bucket[b] for b in sorted(per_bucket)])
-
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = int(pdf["query_id"].iloc[0])
         deleted = None
         if "_del_ids" in pdf.columns:
-            arr = _bucket_ids(pdf, "_del_ids")
+            arr = bucket_ids(pdf, "_del_ids")
             deleted = arr if len(arr) else None
         # ALLOW-list (filter context): unlike tombstones, an empty
-        # reassembly means NOTHING in this group's buckets is eligible.
+        # reassembly means NOTHING in this group's buckets is eligible
+        # (no member docs there).
         # In a fused batch with PER-QUERY filters (``filter_qids``), only
         # the queries that actually carry a filter context read the
         # column — the rest see all-null _keep_ids, which must mean
         # "unfiltered", not "nothing eligible".
         allowed = (
-            _bucket_ids(pdf, "_keep_ids")
+            bucket_ids(pdf, "_keep_ids")
             if "_keep_ids" in pdf.columns
             and (filter_qids is None or query_id in filter_qids)
             else None
@@ -300,34 +283,17 @@ def _scorer_fn(
         # term names sort AFTER every real token (SYN_TERM_PREFIX), so the
         # accumulation order is "all real terms, then phrases" — exactly
         # the order the pre-fusion re-rank added the phrase impacts in.
-        has_syn = "_syn_ids" in pdf.columns
-        syn_row = (
-            pdf["doc_blob"].isna().to_numpy() if has_syn
-            else np.zeros(len(pdf), dtype=bool)
-        )
-
-        def _pack(i: int) -> PackedPostings:
-            return PackedPostings(
-                n=int(pdf["n"].iat[i]),
-                doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                block_size=block_size,
-            )
+        # ``packed_rows`` maps them to None.
+        packs = packed_rows(pdf, block_size)
 
         if strategy == "bmw":
-            if syn_row.any():
+            if any(p is None for p in packs):
                 raise ValueError(
                     "synthetic clause rows require strategy='taat'"
                 )
-            packs = [
-                (pdf["term"].iat[i], float(idf[i]), _pack(i))
-                for i in range(len(pdf))
+            cursors = [
+                (term, float(w), p)
+                for term, w, p in zip(pdf["term"].tolist(), idf, packs)
             ]
             # Merge bucket rows per (term occurrence): group consecutive
             # rows with equal term into one logical list per DUPLICATE set.
@@ -337,14 +303,14 @@ def _scorer_fn(
             # cursors co-exist safely; duplicates contribute twice as in
             # the oracle's multiset.
             ranked = bmw_topk(
-                packs, k, avgdl, deleted=deleted, allowed=allowed
+                cursors, k, avgdl, deleted=deleted, allowed=allowed
             )
             docs_out = np.array([d for d, _ in ranked], dtype=np.int64)
             scores_out = np.array([s for _, s in ranked], dtype=np.float64)
         else:
             docs_parts, contrib_parts = [], []
-            for i in range(len(pdf)):
-                if syn_row[i]:
+            for i, p in enumerate(packs):
+                if p is None:
                     d = np.asarray(pdf["_syn_ids"].iat[i], dtype=np.int64)
                     tfs = pdf["_syn_tfs"].iat[i]
                     if tfs is None:
@@ -360,7 +326,7 @@ def _scorer_fn(
                             ),
                         )
                 else:
-                    d, tf, dl = decode_postings(_pack(i))
+                    d, tf, dl = decode_postings(p)
                     c = float(idf[i]) * _impact(i, tf, dl)
                 docs_parts.append(d)
                 contrib_parts.append(c)

@@ -7,8 +7,20 @@ unchanged (AQE, Arrow, shuffle partitions sized to the cluster).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """``spark.driver.memory`` default for a host with ``phys_bytes`` of
+    RAM: half of it in whole GiB (the Python workers and the OS need the
+    rest — a 48g heap on a 16 GB host was OOM-killed), at least 1g, at
+    most 48g."""
+    return f"{min(48, max(1, phys_bytes // 2 // (1 << 30)))}g"
 
 
 def get_spark(
@@ -48,7 +60,13 @@ def get_spark(
         # varint streams, so measure before assuming — A/B on the bench
         # showed parity walls with ~25% smaller postings.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("DTS_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("DTS_DRIVER_MEM")
+            or default_driver_memory(
+                os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+            ),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -56,3 +74,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_parallel(
+    fns: Sequence[Callable[[], Any]], max_workers: int
+) -> list[Any]:
+    """Run the zero-argument callables ``fns`` on a thread pool of
+    ``max_workers``; return their results in order.
+
+    Each callable runs under ``pyspark.inheritable_thread_target``, so the
+    Spark jobs it launches keep the calling thread's job group and
+    description (a plain pool thread drops them). The first failure
+    cancels the calls still queued and is re-raised once the running
+    ones finish."""
+    wrap = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        futures = [pool.submit(wrap(fn)) for fn in fns]
+        try:
+            return [fut.result() for fut in futures]
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from dts.io import local_rows_df
 
-from dts.codec import PackedPostings, decode_postings
+from dts.codec import decode_postings, packed_rows
 from dts.score_index import (
     MAX_ISIN_TERMS,
     SYN_TERM_PREFIX,
@@ -47,21 +47,7 @@ def _merge_fn(block_size: int):
         sid = int(pdf["sid"].iloc[0])
         bucket = int(pdf["bucket"].iloc[0])
         docs_l, tf_l, dl_l = [], [], []
-        for _, row in pdf.iterrows():
-            p = PackedPostings(
-                n=int(row["n"]),
-                doc_blob=bytes(row["doc_blob"]),
-                tf_blob=bytes(row["tf_blob"]),
-                dl_blob=bytes(row["dl_blob"]),
-                block_last_doc=np.asarray(row["block_last_doc"], dtype=np.int64),
-                block_max_impact=np.asarray(
-                    row["block_max_impact"], dtype=np.float64
-                ),
-                doc_offs=np.asarray(row["doc_offs"], dtype=np.int32),
-                tf_offs=np.asarray(row["tf_offs"], dtype=np.int32),
-                dl_offs=np.asarray(row["dl_offs"], dtype=np.int32),
-                block_size=block_size,
-            )
+        for p in packed_rows(pdf, block_size):
             d, tf, dl = decode_postings(p)
             docs_l.append(d)
             tf_l.append(tf)

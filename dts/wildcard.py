@@ -597,24 +597,10 @@ def _match_docs_from_expansion(
         # Union needs no per-term grouping: decode every row, unique the
         # concatenation (row runs may overlap across terms — np.unique is
         # the union). Row-positional decode, no pandas filtering.
-        from dts.codec import PackedPostings, decode_postings
+        from dts.codec import decode_postings, packed_rows
 
         wq_id = int(pdf["wq_id"].iloc[0])
-        parts = []
-        for i in range(len(pdf)):
-            p = PackedPostings(
-                n=int(pdf["n"].iat[i]),
-                doc_blob=bytes(pdf["doc_blob"].iat[i]),
-                tf_blob=bytes(pdf["tf_blob"].iat[i]),
-                dl_blob=bytes(pdf["dl_blob"].iat[i]),
-                block_last_doc=np.asarray(pdf["block_last_doc"].iat[i], dtype=np.int64),
-                block_max_impact=np.asarray(pdf["block_max_impact"].iat[i], dtype=np.float64),
-                doc_offs=np.asarray(pdf["doc_offs"].iat[i], dtype=np.int32),
-                tf_offs=np.asarray(pdf["tf_offs"].iat[i], dtype=np.int32),
-                dl_offs=np.asarray(pdf["dl_offs"].iat[i], dtype=np.int32),
-                block_size=block_size,
-            )
-            parts.append(decode_postings(p)[0])
+        parts = [decode_postings(p)[0] for p in packed_rows(pdf, block_size)]
         docs = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
         if per_group_limit is not None:
             docs = docs[:per_group_limit]

@@ -3,11 +3,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from dts.codec import (
+    POSTING_COLS,
     PackedPostings,
     bm25_impact,
     decode_block,
     decode_postings,
+    encode_bucket_vectorized,
     encode_postings,
+    packed_rows,
     varint_decode,
     varint_encode,
 )
@@ -131,3 +134,52 @@ def test_compression_ratio_dense_lists():
     assert len(p.doc_blob) < 2 * 100000
     assert len(p.tf_blob) == 100000
     assert len(p.dl_blob) == 100000
+
+
+def test_packed_rows_equals_per_row_construction():
+    """packed_rows over an Arrow-converted posting frame equals building
+    each row's PackedPostings by hand: multi-block rows, a single-block
+    row, and a null-blob synthetic clause row (-> None)."""
+    import pyarrow as pa
+
+    block_size = 4
+    rng = np.random.RandomState(5)
+    counts = [1, 9, 4, 13]  # one single-entry row, multi- and exact-block rows
+    bounds = np.concatenate(([0], np.cumsum(counts)))
+    doc_ids = np.concatenate(
+        [np.cumsum(rng.randint(1, 20, size=c)) for c in counts]
+    ).astype(np.int64)
+    tfs = rng.randint(1, 9, size=bounds[-1])
+    dls = rng.randint(5, 99, size=bounds[-1])
+    rows = encode_bucket_vectorized(doc_ids, tfs, dls, bounds, 30.0, block_size)
+    for t, r in enumerate(rows):
+        r.update(term=f"t{t}", bucket=0)
+    rows.insert(2, {"term": "\uffff\uffffsyn", "bucket": 0, "n": 3})
+    frame = pa.Table.from_pylist(rows).select(list(POSTING_COLS)).to_pandas()
+
+    got = packed_rows(frame, block_size)
+
+    assert got[2] is None
+    for i in (0, 1, 3, 4):
+        want = PackedPostings(
+            n=int(frame["n"].iat[i]),
+            doc_blob=bytes(frame["doc_blob"].iat[i]),
+            tf_blob=bytes(frame["tf_blob"].iat[i]),
+            dl_blob=bytes(frame["dl_blob"].iat[i]),
+            block_last_doc=np.asarray(frame["block_last_doc"].iat[i], dtype=np.int64),
+            block_max_impact=np.asarray(frame["block_max_impact"].iat[i], dtype=np.float64),
+            doc_offs=np.asarray(frame["doc_offs"].iat[i], dtype=np.int32),
+            tf_offs=np.asarray(frame["tf_offs"].iat[i], dtype=np.int32),
+            dl_offs=np.asarray(frame["dl_offs"].iat[i], dtype=np.int32),
+            block_size=block_size,
+        )
+        p = got[i]
+        assert (p.n, p.doc_blob, p.tf_blob, p.dl_blob, p.block_size) == (
+            want.n, want.doc_blob, want.tf_blob, want.dl_blob, want.block_size
+        )
+        for f in ("block_last_doc", "block_max_impact", "doc_offs", "tf_offs", "dl_offs"):
+            a, b = getattr(p, f), getattr(want, f)
+            assert a.dtype == b.dtype and a.tolist() == b.tolist(), f
+        for a, b in zip(decode_postings(p), decode_postings(want)):
+            assert a.tolist() == b.tolist()
+    assert [len(got[i].block_last_doc) for i in (0, 1, 3, 4)] == [1, 3, 1, 4]

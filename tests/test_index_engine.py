@@ -510,6 +510,23 @@ def test_build_pool_failure_propagates_and_unpersists(
     assert jsc.getPersistentRDDs().size() == before
 
 
+def test_build_index_jobs_stay_in_caller_group(
+    spark, corpus_pd, tmp_path, count_jobs
+):
+    """Every job build_index launches, pooled writes included, carries the
+    caller's job group: no ungrouped job appears during the call."""
+    from dts.index_build import build_index
+
+    docs = spark.createDataFrame(corpus_pd.head(50))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    _, n_jobs = count_jobs(
+        lambda: build_index(spark, docs, str(tmp_path / "grp_idx"), bucket_size=64)
+    )
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert n_jobs > 0
+
+
 def test_search_after_pagination(spark, index_dir, queries_pd, force_distribute):
     """search_after page p == rows (p-1)k+1..pk of one deep top-(p·k)
     query, ranks restarting at 1 — across both distributions."""
