@@ -88,6 +88,11 @@ def bm25_impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
+def bm25_idf(n_docs: float, df: np.ndarray) -> np.ndarray:
+    """log(1 + (N - df + 0.5) / (df + 0.5)) — float64, shared formula."""
+    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
 CODEC = "varint"  # the one posting wire format; meta.json's "codec" tag
 
 

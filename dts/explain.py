@@ -35,7 +35,7 @@ EXPLAIN_SCHEMA = (
 def _explain_fn(n_docs: int, avgdl: float, block_size: int,
                 targets: dict[int, np.ndarray], similarity: str = "bm25",
                 total_tokens: float = 0.0):
-    from dts.codec import bm25_impact, decode_postings, packed_rows
+    from dts.codec import bm25_idf, bm25_impact, decode_postings, packed_rows
 
     def weight_impact(df: int, cf: int, tf: int, dl: int) -> float:
         """Per-(clause, doc) contribution under the selected similarity —
@@ -52,7 +52,7 @@ def _explain_fn(n_docs: int, avgdl: float, block_size: int,
             from dts.score import lmd_impact
 
             return float(lmd_impact(tf_a, dl_a, cf, total_tokens)[0])
-        idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+        idf = float(bm25_idf(n_docs, np.asarray([df], dtype=np.float64))[0])
         return idf * float(bm25_impact(tf_a, dl_a, avgdl)[0])
 
     def explain_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -45,237 +45,60 @@ from dts.score_index import (
 from dts.session import run_parallel
 
 
-def _fused_scorer(field_stats: dict, k: int, strategy: str):
-    """Per-(query, shard) kernel scoring ALL fields in one pass — the
-    round-5 fused path: no full-candidate emission, no cross-field agg
-    stage; the group emits its local top-k directly (exact: a doc's whole
-    multi-field score lives in its one bucket shard because sub-indexes
-    share doc_ids and bucket geometry).
-
-    - ``taat``: per-field accumulation in ascending (term, bucket) order,
-      per-field tombstone masking, then Σ_field boost·acc in sorted field
-      order — bit-identical to the per-field oracle sum for ≤2 fields
-      (two-addend IEEE754 sums commute), rank-identical always.
-    - ``bmw``: one block-max WAND walk over ALL fields' cursors — weight
-      = boost·idf, per-cursor avgdl and tombstones (dts.wand round-5
-      extension). Rank-identical at the round-9 key.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from dts.codec import bm25_impact, decode_postings, packed_rows
-    from dts.delete import bucket_ids
-    from dts.wand import bmw_topk
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = int(pdf["query_id"].iloc[0])
-        if strategy == "bmw":
-            packs = []
-            for f_name in sorted(field_stats):
-                g = pdf[pdf["field"] == f_name]
-                if not len(g):
-                    continue
-                st = field_stats[f_name]
-                g = g.sort_values(["term", "bucket"], kind="mergesort")
-                dead = (
-                    bucket_ids(g, "_del_ids")
-                    if "_del_ids" in g.columns
-                    else None
-                )
-                dfv = g["df"].to_numpy(np.float64)
-                idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
-                for term, w, p in zip(
-                    g["term"].tolist(), idf, packed_rows(g, st["block_size"])
-                ):
-                    packs.append(
-                        (
-                            f"{f_name}:{term}",
-                            st["boost"] * float(w),
-                            p,
-                            st["avgdl"],
-                            dead,
-                        )
-                    )
-            ranked = bmw_topk(packs, k, avgdl=0.0)
-            docs_out = np.array([d for d, _ in ranked], dtype=np.int64)
-            scores_out = np.array([s for _, s in ranked], dtype=np.float64)
-        else:
-            parts = []
-            for f_name in sorted(field_stats):
-                g = pdf[pdf["field"] == f_name]
-                if not len(g):
-                    continue
-                st = field_stats[f_name]
-                g = g.sort_values(["term", "bucket"], kind="mergesort")
-                dfv = g["df"].to_numpy(np.float64)
-                idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
-                docs_parts, contrib_parts = [], []
-                for w, p in zip(idf, packed_rows(g, st["block_size"])):
-                    d, tf, dl = decode_postings(p)
-                    docs_parts.append(d)
-                    contrib_parts.append(
-                        float(w) * bm25_impact(tf, dl, st["avgdl"])
-                    )
-                if not docs_parts:
-                    continue
-                uniq_f = np.unique(np.concatenate(docs_parts))
-                acc_f = np.zeros(len(uniq_f), dtype=np.float64)
-                for d, c in zip(docs_parts, contrib_parts):
-                    acc_f[np.searchsorted(uniq_f, d)] += c
-                dead = (
-                    bucket_ids(g, "_del_ids")
-                    if "_del_ids" in g.columns
-                    else None
-                )
-                if dead is not None:
-                    live = ~np.isin(uniq_f, dead, assume_unique=True)
-                    uniq_f, acc_f = uniq_f[live], acc_f[live]
-                if len(uniq_f):
-                    parts.append((uniq_f, st["boost"] * acc_f))
-            if not parts:
-                return pd.DataFrame(
-                    columns=["query_id", "doc_id", "score"]
-                ).astype(
-                    {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-                )
-            union = parts[0][0]
-            for u, _ in parts[1:]:
-                union = np.union1d(union, u)
-            total = np.zeros(len(union), dtype=np.float64)
-            for u, a in parts:
-                total[np.searchsorted(union, u)] += a
-            key = np.round(total, ROUND_RANK)
-            order = np.lexsort((union, -key))[:k]
-            docs_out = union[order].astype(np.int64)
-            scores_out = total[order]
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(docs_out), query_id, dtype=np.int64),
-                "doc_id": docs_out,
-                "score": scores_out,
-            }
-        )
-
-    return score_group
-
-
-def _fused_bucket_topk(
-    spark: SparkSession,
-    out_dir: str,
-    per_field: dict[str, list[tuple[int, str, int]]],
-    fields: dict[str, float],
-    sub_metas: dict[str, dict],
-    k: int,
-    strategy: str,
-    n_shards: int,
-) -> DataFrame:
-    """One mapInPandas pass per (query, shard) over the UNION of every
-    field's pruned posting rows — emits k rows per group instead of the
-    full candidate set, and skips the cross-field hash-agg entirely."""
-    import pandas as pd
-
-    from dts.delete import has_deletes, join_deletes
-    from dts.score_index import _prepare_query_scan, load_index
-
-    field_stats: dict[str, dict] = {}
-    legs = []
-    for f_name, qrows in sorted(per_field.items()):
-        sub_dir = f"{out_dir}/field={f_name}"
-        idx = load_index(spark, sub_dir)
-        meta = sub_metas[f_name]
-        field_stats[f_name] = {
-            "n_docs": float(meta["n_docs"]),
-            "avgdl": float(meta["avgdl"]),
-            "boost": float(fields[f_name]),
-            "block_size": meta["block_size"],
-        }
-        sub_q = local_rows_df(
-            spark,
-            qrows, "query_id long, text string, fuzzy_k int"
-        )
-        prep = _prepare_query_scan(
-            spark, idx, sub_dir, sub_q, MAX_ISIN_TERMS, need_count=False
-        )
-        if prep is None:
-            continue
-        postings, stats, qterms, _, _ = prep
-        joined = postings.join(F.broadcast(stats), "term").join(
-            F.broadcast(qterms), "term"
-        )
-        if has_deletes(sub_dir):
-            joined = join_deletes(joined, spark, sub_dir, meta)
-        else:
-            joined = joined.withColumn(
-                "_del_ids", F.lit(None).cast("array<bigint>")
-            )
-        legs.append(joined.withColumn("field", F.lit(f_name)))
-    if not legs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    union = legs[0]
-    for leg in legs[1:]:
-        union = union.unionByName(leg)
-    union = union.withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
-    )
-    scorer = _fused_scorer(field_stats, k, strategy)
-    n_parts = max(1, 2 * spark.sparkContext.defaultParallelism)
-    src = union.repartition(n_parts, "query_id", "shard")
-
-    def score_partition(batches):
-        import numpy as np  # noqa: F401
-
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for _, g in pdf.groupby(["query_id", "shard"], sort=False):
-            yield scorer(g)
-
-    local = src.mapInPandas(
-        score_partition, "query_id long, doc_id long, score double"
-    )
-    return topk_merge_global(local, k).select(
-        "query_id", "doc_id", "score", F.col("rank").cast("int").alias("rank")
-    )
-
-
-def _fused_flags_scorer(
+def _fused_scorer(
     field_stats: dict,
     k: int,
-    m_map: dict[int, int],
+    strategy: str = "taat",
+    m_map: dict[int, int] | None = None,
     combine: str = "sum",
     tie_breaker: float = 0.0,
 ):
-    """Per-(query, shard) kernel for the UNIFIED GRAMMAR over all fields
-    in one pass (round-5 late session): role-typed clause rows (and
-    phrase synthetic rows) from every field arrive in one group; the
-    kernel scores each field in the engine's fixed ascending
-    (term, bucket) order, counts required-clause membership and excluded
-    membership per doc ACROSS fields, enforces Σreq == m ∧ ¬excl, and
-    emits the local top-k — the whole cross-field MUST/MUST_NOT algebra
-    with no candidate emission, no hash-agg stage, no filter join and no
-    local window. Exact per group: sub-indexes share doc_ids and bucket
-    geometry, so a doc's entire cross-field evidence lives in its one
-    shard. Scores are bit-identical to the per-field oracle sum for ≤2
-    fields (two-addend IEEE754 sums commute; per-field accumulation in
-    the engine's fixed order)."""
+    """Per-(query, shard) kernel scoring ALL fields of a multifield index
+    in one pass: clause rows (and phrase synthetic rows) from every field
+    arrive in one group, and the group emits its local top-k directly —
+    no candidate emission, no cross-field hash agg, no filter join.
+    Exact per group: sub-indexes share doc_ids and bucket geometry, so a
+    doc's whole multi-field evidence lives in its one shard.
+
+    - ``taat``: per field, row contributions accumulate in the engine's
+      fixed ascending (term, bucket) order over the field's live docs
+      (tombstones masked per field); required-clause (role 1) and
+      excluded (role 2) membership is counted per doc ACROSS fields, the
+      group keeps docs with Σreq == m ∧ ¬excl (``m_map``; 0 for a query
+      with no required clause), and fields combine in sorted field order
+      as Σ boost·acc (``combine="sum"``) or Lucene dismax. Scores are
+      bit-identical to the per-field oracle sum for ≤2 fields (two-addend
+      IEEE754 sums commute). Rows without a ``role`` column are role 0.
+    - ``bmw``: one block-max WAND walk over ALL fields' cursors — weight
+      = boost·idf, per-cursor avgdl and tombstones (dts.wand). Plain
+      disjunctive rows only; rank-identical at the round-9 key."""
     import numpy as np
     import pandas as pd
 
-    from dts.codec import bm25_impact, decode_postings, packed_rows
+    from dts.codec import bm25_idf, bm25_impact, packed_rows
     from dts.delete import bucket_ids
+    from dts.score_index import clause_sets, row_contributions
+    from dts.wand import bmw_topk
 
-    empty = pd.DataFrame(columns=["query_id", "doc_id", "score"]).astype(
-        {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-    )
+    m_map = m_map or {}
+
+    def _frame(query_id, docs, scores) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "query_id": np.full(len(docs), query_id, dtype=np.int64),
+                "doc_id": np.asarray(docs, dtype=np.int64),
+                "score": np.asarray(scores, dtype=np.float64),
+            }
+        )
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = int(pdf["query_id"].iloc[0])
         m = m_map.get(query_id, 0)
+        cursors = []  # bmw: one cursor per posting row, every field
         # Per field: candidate docs (ANY clause), scoring accumulation,
         # per-required-clause doc sets, excluded doc set — each masked by
         # that field's tombstones.
-        f_parts = []   # (uniq_f, boost*acc_f)
+        f_parts = []  # (uniq_f, boost*acc_f)
         req_sets: list[np.ndarray] = []  # one per (field, required clause)
         excl_sets: list[np.ndarray] = []
         for f_name in sorted(field_stats):
@@ -284,40 +107,46 @@ def _fused_flags_scorer(
                 continue
             st = field_stats[f_name]
             g = g.sort_values(["term", "bucket"], kind="mergesort")
-            dfv = g["df"].to_numpy(np.float64)
-            idf = np.log(1.0 + (st["n_docs"] - dfv + 0.5) / (dfv + 0.5))
+            idf = bm25_idf(st["n_docs"], g["df"].to_numpy(np.float64))
             if "boost" in g.columns:
                 # Per-row query boosts (term^2 in the grammar) — on top
                 # of the per-FIELD boost applied at the combine below.
                 bv = g["boost"].to_numpy(np.float64)
                 idf = idf * np.where(np.isnan(bv), 1.0, bv)
-            role_vals = g["role"].to_numpy()
-            clause_vals = g["clause"].to_numpy()
-            docs_parts, contribs = [], []
-            for i, p in enumerate(packed_rows(g, st["block_size"])):
-                if p is None:
-                    d = np.asarray(g["_syn_ids"].iat[i], dtype=np.int64)
-                    tfs = g["_syn_tfs"].iat[i]
-                    if tfs is None:
-                        c = np.zeros(len(d), dtype=np.float64)
-                    else:
-                        c = float(idf[i]) * bm25_impact(
-                            np.asarray(tfs, dtype=np.float64),
-                            np.asarray(g["_syn_dls"].iat[i], dtype=np.float64),
-                            st["avgdl"],
-                        )
-                else:
-                    d, tf, dl = decode_postings(p)
-                    c = float(idf[i]) * bm25_impact(tf, dl, st["avgdl"])
-                docs_parts.append(d)
-                contribs.append(c)
-            if not docs_parts:
-                continue
-            uniq_f = np.unique(np.concatenate(docs_parts))
+            role_vals = (
+                g["role"].to_numpy()
+                if "role" in g.columns
+                else np.zeros(len(g), dtype=np.int64)
+            )
+            packs = packed_rows(g, st["block_size"])
             dead = (
                 bucket_ids(g, "_del_ids") if "_del_ids" in g.columns
                 else None
             )
+            if strategy == "bmw":
+                if (role_vals != 0).any() or any(p is None for p in packs):
+                    raise ValueError(
+                        "required/excluded and synthetic clause rows "
+                        "require strategy='taat'"
+                    )
+                cursors.extend(
+                    (
+                        f"{f_name}:{term}",
+                        st["boost"] * float(w),
+                        p,
+                        st["avgdl"],
+                        dead,
+                    )
+                    for term, w, p in zip(g["term"].tolist(), idf, packs)
+                )
+                continue
+            avgdl = st["avgdl"]
+            docs_parts, contribs = row_contributions(
+                g, packs, idf, lambda i, tf, dl: bm25_impact(tf, dl, avgdl)
+            )
+            if not docs_parts:
+                continue
+            uniq_f = np.unique(np.concatenate(docs_parts))
             if dead is not None:
                 uniq_f = uniq_f[~np.isin(uniq_f, dead, assume_unique=True)]
             if not len(uniq_f):
@@ -330,7 +159,6 @@ def _fused_flags_scorer(
                 valid = uniq_f[pos] == d
                 acc_f[pos[valid]] += c[valid]
             f_parts.append((uniq_f, st["boost"] * acc_f))
-            terms_arr = g["term"].to_numpy()
 
             def _live(s):
                 # req/excl membership must ignore THIS field's tombstones:
@@ -340,15 +168,15 @@ def _fused_flags_scorer(
                     return s
                 return s[~np.isin(s, dead, assume_unique=True)]
 
-            for cl in np.unique(clause_vals[role_vals == 1]):
-                idxs = np.flatnonzero((clause_vals == cl) & (role_vals == 1))
-                rows_c = [docs_parts[i] for i in idxs]
-                if len(rows_c) == 1:
-                    s = rows_c[0]
-                elif len(set(terms_arr[idxs])) == 1:
-                    s = np.concatenate(rows_c)
-                else:
-                    s = np.unique(np.concatenate(rows_c))
+            clause_vals = g["clause"].to_numpy()
+            for s in clause_sets(
+                docs_parts,
+                g["term"].to_numpy(),
+                [
+                    np.flatnonzero((clause_vals == cl) & (role_vals == 1))
+                    for cl in np.unique(clause_vals[role_vals == 1])
+                ],
+            ):
                 s = _live(s)
                 if len(s):
                     req_sets.append(s)
@@ -359,8 +187,13 @@ def _fused_flags_scorer(
                 )
                 if len(ex):
                     excl_sets.append(ex)
+        if strategy == "bmw":
+            ranked = bmw_topk(cursors, k, avgdl=0.0)
+            return _frame(
+                query_id, [d for d, _ in ranked], [s for _, s in ranked]
+            )
         if not f_parts:
-            return empty
+            return _frame(query_id, [], [])
         union = f_parts[0][0]
         for u, _ in f_parts[1:]:
             union = np.union1d(union, u)
@@ -388,54 +221,77 @@ def _fused_flags_scorer(
             pos = np.minimum(np.searchsorted(s, union), len(s) - 1)
             keep &= s[pos] != union
         union, total = union[keep], total[keep]
-        if not len(union):
-            return empty
         key = np.round(total, ROUND_RANK)
         order = np.lexsort((union, -key))[:k]
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(order), query_id, dtype=np.int64),
-                "doc_id": union[order].astype(np.int64),
-                "score": total[order],
-            }
-        )
+        return _frame(query_id, union[order], total[order])
 
     return score_group
 
 
-def fused_flags_topk(
+def check_shared_geometry(
+    metas: dict[str, dict], keys: tuple[str, ...] = ("bucket_size",)
+) -> None:
+    """Raise ``ValueError`` unless every sub-index meta agrees on ``keys``.
+    The fused multifield paths shard by bucket across fields, which is
+    exact only when all sub-indexes share one bucket geometry."""
+    for key in keys:
+        vals = {f: metas[f][key] for f in sorted(metas)}
+        if len(set(vals.values())) > 1:
+            raise ValueError(
+                f"multifield sub-indexes disagree on {key}: {vals}; the "
+                "fields must share one doc set and bucket geometry "
+                "(rebuild them with one build_multifield_index call)"
+            )
+
+
+def fused_multifield_topk(
     spark: SparkSession,
     out_dir: str,
-    per_field_rows: dict[str, list[tuple[int, int, int, str, float]]],
-    syn_by_field: dict[str, DataFrame],
     fields: dict[str, float],
-    sub_metas: dict[str, dict],
-    m_map: dict[int, int],
+    touched: list[str],
+    field_leg,
     k: int,
-    n_shards: int,
+    strategy: str = "taat",
+    m_map: dict[int, int] | None = None,
     combine: str = "sum",
     tie_breaker: float = 0.0,
 ) -> DataFrame:
-    """One scoring job for the unified grammar over a multifield index:
-    union every field's pruned posting rows (clause/role columns riding
-    the broadcast qterms join, phrase synthetic rows unioned per field),
-    one mapInPandas pass per (query, shard) running _fused_flags_scorer,
-    then the tiny global top-k merge — the dts.parser.search_fields
-    path."""
+    """The one (query, shard) plan over a multifield index, shared by
+    :func:`bm25_topk_multifield` and ``dts.parser.search_fields``: per
+    touched field, the caller's pruned posting rows broadcast-join their
+    term stats and query-term rows, tombstones join per field, phrase
+    synthetic rows union in after them, and the field-tagged legs union
+    into ONE mapInPandas pass per (query, shard) running
+    :func:`_fused_scorer`; ``topk_merge_global`` ranks the k×shards
+    survivors. Exact: local top-k under the global ranking key restricted
+    to disjoint shards can never drop a global top-k doc.
+
+    ``field_leg(f_name, idx)`` returns ``(postings, stats, qterms, syn)``
+    for one touched field (``idx`` is its ``load_index`` handle; ``syn``
+    may be None), or None when the field contributes no rows. The
+    sub-index metas are checked for one bucket geometry first
+    (``ValueError`` otherwise); ``scoring_shards`` sets the fanout."""
     import pandas as pd
 
     from dts.delete import has_deletes, join_deletes
-    from dts.score_index import (
-        POSTING_SCORE_COLS,
-        load_index,
-        term_filter,
-    )
+    from dts.score_index import load_index
 
+    sub_metas = {f: load_meta(f"{out_dir}/field={f}") for f in touched}
+    check_shared_geometry(sub_metas)
+    if strategy == "bmw":
+        for f_name, meta in sub_metas.items():
+            if not meta.get("bmw_safe", True):
+                raise ValueError(
+                    f"bmw strategy unavailable: sub-index field={f_name} "
+                    "has stale block maxima; use 'taat' or compact"
+                )
+    n_shards = scoring_shards(
+        next(iter(sub_metas.values())), spark.sparkContext.defaultParallelism
+    )
     field_stats: dict[str, dict] = {}
     legs = []
-    for f_name in sorted(set(per_field_rows) | set(syn_by_field)):
+    for f_name in touched:
         sub_dir = f"{out_dir}/field={f_name}"
-        idx = load_index(spark, sub_dir)
         meta = sub_metas[f_name]
         field_stats[f_name] = {
             "n_docs": float(meta["n_docs"]),
@@ -443,27 +299,18 @@ def fused_flags_topk(
             "boost": float(fields[f_name]),
             "block_size": meta["block_size"],
         }
-        rows = per_field_rows.get(f_name, [])
-        qterms = local_rows_df(
-            spark,
-            rows,
-            "query_id long, clause int, role int, term string, boost double",
+        leg = field_leg(f_name, load_index(spark, sub_dir))
+        if leg is None:
+            continue
+        postings, stats, qterms, syn = leg
+        rows = postings.join(F.broadcast(stats), "term").join(
+            F.broadcast(qterms), "term"
         )
-        scan = idx["postings"].select(*POSTING_SCORE_COLS)
-        postings = term_filter(scan, sorted({r[3] for r in rows}))
-        joined = postings.join(
-            F.broadcast(
-                term_filter(idx["term_stats"], sorted({r[3] for r in rows}))
-                .select("term", "df")
-            ),
-            "term",
-        ).join(F.broadcast(qterms), "term")
         if has_deletes(sub_dir):
-            joined = join_deletes(joined, spark, sub_dir, meta)
-        syn = syn_by_field.get(f_name)
+            rows = join_deletes(rows, spark, sub_dir, meta)
         if syn is not None:
-            joined = joined.unionByName(syn, allowMissingColumns=True)
-        legs.append(joined.withColumn("field", F.lit(f_name)))
+            rows = rows.unionByName(syn, allowMissingColumns=True)
+        legs.append(rows.withColumn("field", F.lit(f_name)))
     if not legs:
         return spark.createDataFrame([], TOPK_SCHEMA)
     union = legs[0]
@@ -472,7 +319,9 @@ def fused_flags_topk(
     union = union.withColumn(
         "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
     )
-    scorer = _fused_flags_scorer(field_stats, k, m_map, combine, tie_breaker)
+    scorer = _fused_scorer(
+        field_stats, k, strategy, m_map, combine, tie_breaker
+    )
     n_parts = max(1, 2 * spark.sparkContext.defaultParallelism)
     src = union.repartition(n_parts, "query_id", "shard")
 
@@ -556,17 +405,16 @@ def bm25_topk_multifield(
     [, fuzzy_k]); clause routing per ``parse_field_query``. Returns the
     engine-standard (query_id, doc_id, score, rank).
 
-    One execution path at every bucket count (``_fused_bucket_topk``):
-    sub-indexes share doc_ids AND bucket boundaries, so a document's
-    entire multi-field score lives in ONE bucket shard across all fields.
-    Every field's pruned posting rows union into one mapInPandas pass per
-    (query, shard) — ``scoring_shards`` sets the fanout — whose kernel
-    scores all fields and emits its local top-k; ``topk_merge_global``
-    ranks the k×shards survivors. Exact: local top-k under the global
-    ranking key restricted to disjoint shards can never drop a global
-    top-k doc. With strategy='bmw' the kernel runs a single block-max
-    WAND walk across all fields' cursors (per-cursor boost·idf weight,
-    avgdl, tombstones)."""
+    One execution path at every bucket count: the shared fused plan
+    (:func:`fused_multifield_topk`) over each field's fuzzy-expanded,
+    pruned posting rows. Sub-indexes share doc_ids AND bucket boundaries,
+    so a document's entire multi-field score lives in ONE bucket shard
+    across all fields; each (query, shard) group scores all fields and
+    emits its local top-k. With strategy='bmw' the kernel runs a single
+    block-max WAND walk across all fields' cursors (per-cursor boost·idf
+    weight, avgdl, tombstones)."""
+    from dts.score_index import _prepare_query_scan
+
     meta = load_multifield_meta(out_dir)
     fields: dict[str, float] = meta["fields"]
     if default_field is None:
@@ -589,26 +437,18 @@ def bm25_topk_multifield(
     if not per_field:
         return spark.createDataFrame([], TOPK_SCHEMA)
 
-    sub_metas = {
-        f_name: load_meta(f"{out_dir}/field={f_name}") for f_name in per_field
-    }
-    bucket_sizes = {m["bucket_size"] for m in sub_metas.values()}
-    assert len(bucket_sizes) == 1, (
-        f"multifield sub-indexes disagree on bucket_size: {bucket_sizes} — "
-        "the shared shard mapping requires one bucket geometry"
-    )
-    any_meta = next(iter(sub_metas.values()))
-    if strategy == "bmw":
-        for f_name, m in sub_metas.items():
-            if not m.get("bmw_safe", True):
-                raise ValueError(
-                    f"bmw strategy unavailable: sub-index field="
-                    f"{f_name} has stale block maxima; use 'taat' or "
-                    "compact"
-                )
-    return _fused_bucket_topk(
-        spark, out_dir, per_field, fields, sub_metas, k, strategy,
-        scoring_shards(any_meta, spark.sparkContext.defaultParallelism),
+    def field_leg(f_name: str, idx: dict):
+        sub_q = local_rows_df(
+            spark, per_field[f_name], "query_id long, text string, fuzzy_k int"
+        )
+        prep = _prepare_query_scan(
+            spark, idx, f"{out_dir}/field={f_name}", sub_q, MAX_ISIN_TERMS,
+            need_count=False,
+        )
+        return None if prep is None else (*prep[:3], None)
+
+    return fused_multifield_topk(
+        spark, out_dir, fields, sorted(per_field), field_leg, k, strategy
     )
 
 
@@ -862,23 +702,18 @@ def combined_fields_topk(
         return empty
     terms = sorted({t for *_, t in occ})
 
-    n_docs: int | None = None
+    sub_metas = {f: load_meta(f"{out_dir}/field={f}") for f in fields}
+    check_shared_geometry(sub_metas, ("n_docs", "bucket_size"))
+    any_meta = sub_metas[min(fields)]
+    n_docs = int(any_meta["n_docs"])
     avgdlc = 0.0
     df_sum: dict[str, int] = {}
     legs = []
-    bucket_size = None
     for f_name in sorted(fields):
         w = fields[f_name]
         sub = f"{out_dir}/field={f_name}"
         idx = load_index(spark, sub)
-        m = idx["meta"]
-        if n_docs is None:
-            n_docs, bucket_size = int(m["n_docs"]), int(m["bucket_size"])
-        else:
-            assert int(m["n_docs"]) == n_docs, (
-                "combined_fields requires sub-indexes over the same doc set"
-            )
-            assert int(m["bucket_size"]) == bucket_size
+        m = sub_metas[f_name]
         avgdlc += w * float(m["avgdl"])
         for r in term_filter(
             idx["term_stats"].select("term", "df"), terms
@@ -974,10 +809,7 @@ def combined_fields_topk(
     total = contrib.groupBy("query_id", "bucket", "doc_id").agg(
         F.sum("contrib").alias("score")
     )
-    n_shards = scoring_shards(
-        {"n_docs": n_docs, "bucket_size": bucket_size},
-        spark.sparkContext.defaultParallelism,
-    )
+    n_shards = scoring_shards(any_meta, spark.sparkContext.defaultParallelism)
     total = total.withColumn(
         "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
     )

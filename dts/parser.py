@@ -556,10 +556,11 @@ def search_fields(
     Plan shape — one execution path at every bucket count: ONE scoring
     job in which every field's pruned posting rows (clause/role-tagged,
     plus phrase synthetic rows) union into one mapInPandas pass per
-    (query, shard) (multifield.fused_flags_topk; ``scoring_shards`` sets
-    the fanout) whose kernel scores all fields, enforces the cross-field
-    Σreq == m ∧ ¬excl algebra, and emits k rows per group — no candidate
-    emission, no hash-agg stage, no filter join, no local window. Phrase
+    (query, shard) (multifield.fused_multifield_topk, the plan shared
+    with bm25_topk_multifield; ``scoring_shards`` sets the fanout) whose
+    kernel scores all fields, enforces the cross-field Σreq == m ∧ ¬excl
+    algebra, and emits k rows per group — no candidate emission, no
+    hash-agg stage, no filter join, no local window. Phrase
     constraints ride INSIDE the scoring rows as synthetic clause rows
     (dts.phrase.phrase_syn_rows — one positional job per field with
     phrases, all queries fused): a required phrase is one more
@@ -568,10 +569,9 @@ def search_fields(
 
     Returns the engine-standard (query_id, doc_id, score, rank) with
     query_id = position in ``queries``."""
-    from dts.index_build import load_meta
-    from dts.multifield import fused_flags_topk, load_multifield_meta
+    from dts.multifield import fused_multifield_topk, load_multifield_meta
     from dts.phrase import phrase_syn_rows
-    from dts.score_index import TOPK_SCHEMA, scoring_shards
+    from dts.score_index import POSTING_SCORE_COLS, TOPK_SCHEMA, term_filter
 
     if isinstance(queries, str):
         queries = [queries]
@@ -616,26 +616,29 @@ def search_fields(
     if not per_field_rows and not ph_by_field:
         return spark.createDataFrame([], TOPK_SCHEMA)
 
-    touched = sorted(set(per_field_rows) | set(ph_by_field))
-    sub_metas = {f: load_meta(f"{mf_dir}/field={f}") for f in touched}
-    bucket_sizes = {m["bucket_size"] for m in sub_metas.values()}
-    assert len(bucket_sizes) == 1, (
-        f"multifield sub-indexes disagree on bucket_size: {bucket_sizes}"
-    )
-    any_meta = next(iter(sub_metas.values()))
-    n_shards = scoring_shards(any_meta, spark.sparkContext.defaultParallelism)
-    syn_by_field = {}
-    for f_name in touched:
+    def field_leg(f_name: str, idx: dict):
+        rows = per_field_rows.get(f_name, [])
+        terms = sorted({r[3] for r in rows})
+        qterms = local_rows_df(
+            spark,
+            rows,
+            "query_id long, clause int, role int, term string, boost double",
+        )
         syn = phrase_syn_rows(
             spark, f"{mf_dir}/field={f_name}",
             ph_by_field.get(f_name, []), with_dl=False,
         )
-        if syn is not None:
-            syn_by_field[f_name] = syn
-    return fused_flags_topk(
-        spark, mf_dir, per_field_rows, syn_by_field, fields,
-        sub_metas, m_total, k, n_shards,
-        combine=combine, tie_breaker=tie_breaker,
+        return (
+            term_filter(idx["postings"].select(*POSTING_SCORE_COLS), terms),
+            term_filter(idx["term_stats"], terms).select("term", "df"),
+            qterms,
+            syn,
+        )
+
+    return fused_multifield_topk(
+        spark, mf_dir, fields, sorted(set(per_field_rows) | set(ph_by_field)),
+        field_leg, k, m_map=m_total, combine=combine,
+        tie_breaker=tie_breaker,
     )
 
 

@@ -38,7 +38,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dts.codec import POSTING_COLS, bm25_impact, packed_rows
+from dts.codec import (
+    POSTING_COLS,
+    bm25_idf,
+    bm25_impact,
+    decode_postings,
+    packed_rows,
+)
 from dts.delete import bucket_ids, has_deletes, join_deletes
 from dts.fuzzy import build_vocab_struct, expand_fuzzy_local, expand_fuzzy_terms
 from dts.index_build import index_revision, load_meta
@@ -170,6 +176,57 @@ def expanded_query_terms(
     return exact.unionByName(expanded)
 
 
+def row_contributions(
+    pdf: pd.DataFrame, packs: list, idf: np.ndarray, impact
+):
+    """Per scoring row, in row order: (doc ids, idf·impact contributions).
+    Posting rows decode their blocks; synthetic clause rows (``packs[i]``
+    is None — fused phrases, see SYN_TERM_PREFIX) carry precomputed
+    ``_syn_ids``/``_syn_tfs``/``_syn_dls`` arrays. ``impact(i, tf, dl)``
+    is row ``i``'s per-doc factor. Shared by the single-index and the
+    fused multifield kernels."""
+    docs_parts, contrib_parts = [], []
+    for i, p in enumerate(packs):
+        if p is None:
+            d = np.asarray(pdf["_syn_ids"].iat[i], dtype=np.int64)
+            tfs = pdf["_syn_tfs"].iat[i]
+            if tfs is None:
+                # Filter-context phrase / deny clause: membership only,
+                # zero scoring contribution.
+                c = np.zeros(len(d), dtype=np.float64)
+            else:
+                c = float(idf[i]) * impact(
+                    i,
+                    np.asarray(tfs, dtype=np.int64),
+                    np.asarray(pdf["_syn_dls"].iat[i], dtype=np.int64),
+                )
+        else:
+            d, tf, dl = decode_postings(p)
+            c = float(idf[i]) * impact(i, tf, dl)
+        docs_parts.append(d)
+        contrib_parts.append(c)
+    return docs_parts, contrib_parts
+
+
+def clause_sets(
+    docs_parts: list[np.ndarray], terms_arr: np.ndarray, idxs_by_clause
+) -> list[np.ndarray]:
+    """Per-clause candidate doc sets (union of the clause's rows, given
+    as row-index arrays). One-term clauses skip np.unique: their bucket
+    rows arrive in ascending (term, bucket) order over disjoint doc
+    ranges, so the concat is already sorted+unique."""
+    sets = []
+    for idxs in idxs_by_clause:
+        rows_c = [docs_parts[i] for i in idxs]
+        if len(rows_c) == 1:
+            sets.append(rows_c[0])
+        elif len(set(terms_arr[idxs])) == 1:
+            sets.append(np.concatenate(rows_c))
+        else:
+            sets.append(np.unique(np.concatenate(rows_c)))
+    return sets
+
+
 def _scorer_fn(
     n_docs: int,
     avgdl: float,
@@ -198,7 +255,6 @@ def _scorer_fn(
     query's clause count (including clauses with zero index matches, which
     correctly make the whole query match nothing). Scores are the same
     disjunctive BM25 sums, AND only filters eligibility."""
-    from dts.codec import decode_postings
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         query_id = int(pdf["query_id"].iloc[0])
@@ -267,7 +323,7 @@ def _scorer_fn(
                 tf, dl, cf_arr[i], total_tokens
             )
         else:
-            idf = np.log(1.0 + (n_docs - df_arr + 0.5) / (df_arr + 0.5))
+            idf = bm25_idf(n_docs, df_arr)
             _impact = lambda i, tf, dl: bm25_impact(tf, dl, avgdl)  # noqa: E731
         if "boost" in pdf.columns:
             # Per-row query boosts (Lucene ``^``): fold into the row
@@ -308,50 +364,14 @@ def _scorer_fn(
             docs_out = np.array([d for d, _ in ranked], dtype=np.int64)
             scores_out = np.array([s for _, s in ranked], dtype=np.float64)
         else:
-            docs_parts, contrib_parts = [], []
-            for i, p in enumerate(packs):
-                if p is None:
-                    d = np.asarray(pdf["_syn_ids"].iat[i], dtype=np.int64)
-                    tfs = pdf["_syn_tfs"].iat[i]
-                    if tfs is None:
-                        # Filter-context phrase / deny clause: membership
-                        # only, zero scoring contribution.
-                        c = np.zeros(len(d), dtype=np.float64)
-                    else:
-                        c = float(idf[i]) * _impact(
-                            i,
-                            np.asarray(tfs, dtype=np.int64),
-                            np.asarray(
-                                pdf["_syn_dls"].iat[i], dtype=np.int64
-                            ),
-                        )
-                else:
-                    d, tf, dl = decode_postings(p)
-                    c = float(idf[i]) * _impact(i, tf, dl)
-                docs_parts.append(d)
-                contrib_parts.append(c)
+            docs_parts, contrib_parts = row_contributions(
+                pdf, packs, idf, _impact
+            )
             empty = pd.DataFrame(
                 columns=["query_id", "doc_id", "score", "rank"]
             ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"})
             if not docs_parts:
                 return empty
-            def _clause_sets(idxs_by_clause):
-                """Per-clause candidate doc sets (union of the clause's
-                rows). One-term clauses skip np.unique: their bucket rows
-                arrive in ascending (term, bucket) order over disjoint doc
-                ranges, so the concat is already sorted+unique."""
-                terms_arr = pdf["term"].to_numpy()
-                sets = []
-                for idxs in idxs_by_clause:
-                    rows_c = [docs_parts[i] for i in idxs]
-                    if len(rows_c) == 1:
-                        sets.append(rows_c[0])
-                    elif len(set(terms_arr[idxs])) == 1:
-                        sets.append(np.concatenate(rows_c))
-                    else:
-                        sets.append(np.unique(np.concatenate(rows_c)))
-                return sets
-
             def _intersect(sets):
                 """Smallest-first intersection; searchsorted probe INTO the
                 larger sorted set — np.isin would re-sort the head clause's
@@ -386,7 +406,8 @@ def _scorer_fn(
                 uniq_cl = np.unique(clause_vals)
                 if len(uniq_cl) < m:
                     return empty  # a clause matched no index term
-                sets = _clause_sets(
+                sets = clause_sets(
+                    docs_parts, pdf["term"].to_numpy(),
                     [np.flatnonzero(clause_vals == cl) for cl in uniq_cl]
                 )
                 uniq = _intersect(sets)
@@ -416,7 +437,8 @@ def _scorer_fn(
                 )
                 score_mask = role_vals != 2
                 if m > 0:
-                    sets = _clause_sets(
+                    sets = clause_sets(
+                        docs_parts, pdf["term"].to_numpy(),
                         [
                             np.flatnonzero(
                                 (clause_vals == cl) & (role_vals == 1)
@@ -455,7 +477,10 @@ def _scorer_fn(
                 leaf_scores: dict[int, np.ndarray] = {}
                 for cl in np.unique(clause_vals):
                     mask = clause_vals == cl
-                    s = _clause_sets([np.flatnonzero(mask)])[0]
+                    s = clause_sets(
+                        docs_parts, pdf["term"].to_numpy(),
+                        [np.flatnonzero(mask)],
+                    )[0]
                     leaf_docs[int(cl)] = s
                     leaf_scores[int(cl)] = _accumulate_over(s, row_mask=mask)
 

@@ -41,6 +41,7 @@ from dts.score_index import (
     TOPK_SCHEMA,
     load_index,
     score_expanded_terms,
+    scoring_shards,
 )
 
 # Lucene's IndexSearcher.maxClauseCount default: a scored multi-term
@@ -611,13 +612,10 @@ def _match_docs_from_expansion(
             }
         )
 
-    # Shard buckets (same trick as bucket-distributed scoring): union is
-    # exact under ANY partition of buckets, and ~4×cores groups amortize
-    # the per-group applyInPandas overhead that per-bucket groups pay.
-    n_buckets = -(-meta["n_docs"] // meta["bucket_size"])
-    n_shards = max(
-        1, min(n_buckets, 4 * spark.sparkContext.defaultParallelism)
-    )
+    # Shard buckets (the shared ``scoring_shards`` rule): union is exact
+    # under ANY partition of buckets, and ~4×cores groups amortize the
+    # per-group applyInPandas overhead that per-bucket groups pay.
+    n_shards = scoring_shards(meta, spark.sparkContext.defaultParallelism)
     out = (
         joined.withColumn("shard", F.pmod(F.col("bucket"), F.lit(n_shards)))
         .groupBy("wq_id", "shard")

@@ -578,3 +578,40 @@ def test_search_after_pagination(spark, index_dir, queries_pd, force_distribute)
         bm25_topk_indexed(
             spark, index_dir, qdf, k=k, strategy="bmw", search_after={0: (1.0, 0)}
         )
+
+
+def test_single_index_job_counts(
+    spark, docs_sdf, queries_pd, tmp_path, count_jobs
+):
+    """Per-call Spark job counts of the single-index hot paths on a warm
+    second call (the first call of a process also reads index schemas and
+    the vocabulary): TAAT and block-max WAND scoring, phrase matching and
+    a tombstone-applying compaction."""
+    from dts.delete import delete_docs
+    from dts.index_build import compact_index
+    from dts.phrase import phrase_match_counts
+
+    d = str(tmp_path / "jobs_idx")
+    build_index(
+        spark, docs_sdf, d, bucket_size=64, block_size=16, positions=True
+    )
+    q = spark.createDataFrame(queries_pd[["query_id", "text", "fuzzy_k"]])
+    ph = spark.createDataFrame(
+        [(0, queries_pd["text"].iloc[0]), (1, queries_pd["text"].iloc[1])],
+        "phrase_id long, text string",
+    )
+    jobs = {}
+    for _ in range(2):
+        for strategy in ("taat", "bmw"):
+            _, jobs[strategy] = count_jobs(
+                lambda: bm25_topk_indexed(
+                    spark, d, q, k=10, strategy=strategy
+                ).collect()
+            )
+        _, jobs["phrase"] = count_jobs(
+            lambda: phrase_match_counts(spark, d, ph).collect()
+        )
+    for dead in ([1, 2, 3], [70, 71]):
+        delete_docs(spark, d, dead)
+        _, jobs["compact"] = count_jobs(lambda: compact_index(spark, d))
+    assert jobs == {"taat": 4, "bmw": 4, "phrase": 4, "compact": 36}, jobs

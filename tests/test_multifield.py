@@ -359,7 +359,7 @@ def test_search_fields_fused_identical_to_candidates(
     spark, mfp_index, corpus_pd, mf_oracles
 ):
     """Round-5 late session: the one-job fused kernel for the unified
-    grammar (multifield.fused_flags_topk) must be rank-identical to the
+    grammar (multifield.fused_multifield_topk) must be rank-identical to the
     per-field oracle across every query shape — scoped MUST/MUST_NOT,
     field-scoped phrases, wildcards, and a required term whose expansion
     is empty."""
@@ -572,6 +572,70 @@ def test_multifield_job_counts(spark, mfp_index, corpus_pd, count_jobs):
         )
     assert sf_jobs == 7, sf_jobs
     assert mf_jobs == 14, mf_jobs
+
+
+def test_subindex_geometry_mismatch_raises(
+    spark, docs_sdf, corpus_pd, tmp_path
+):
+    """Sub-indexes whose bucket_size differs cannot share the fused
+    per-shard plan (or combined_fields' shard windows): every multifield
+    scorer rejects the index with ValueError, under ``python -O`` too."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from dts.index_build import build_index
+    from dts.multifield import combined_fields_topk
+    from dts.parser import search_fields
+
+    d = str(tmp_path / "mf_geom")
+    for col, bucket_size in (("content", 64), ("path", 32)):
+        build_index(
+            spark, docs_sdf.select("doc_id", F.col(col).alias("content")),
+            f"{d}/field={col}", bucket_size=bucket_size, block_size=16,
+        )
+    with open(f"{d}/meta.json", "w") as f:
+        json.dump({"fields": FIELDS}, f)
+    ctok = tokenize_text(corpus_pd["content"].iloc[0])[0]
+    ptok = tokenize_text(corpus_pd["path"].iloc[4])[0]
+    text = f"{ctok} path:{ptok}"
+    q = spark.createDataFrame([(0, text)], "query_id long, text string")
+    with pytest.raises(ValueError, match="bucket_size"):
+        bm25_topk_multifield(spark, d, q, k=10)
+    with pytest.raises(ValueError, match="bucket_size"):
+        search_fields(spark, d, [text], k=10)
+    with pytest.raises(ValueError, match="bucket_size"):
+        combined_fields_topk(spark, d, q, k=10)
+
+
+def test_fused_bmw_rejects_role_and_synthetic_rows(mf_index, corpus_pd):
+    """The fused kernel's block-max WAND walk scores plain disjunctive
+    rows only: a required/excluded clause row or a synthetic phrase row
+    raises ValueError instead of being scored as an optional term."""
+    import pandas as pd
+
+    from dts.index_build import load_meta
+    from dts.multifield import _fused_scorer
+
+    sub = f"{mf_index}/field=content"
+    meta = load_meta(sub)
+    term = tokenize_text(corpus_pd["content"].iloc[0])[0]
+    rows = pd.read_parquet(f"{sub}/postings")
+    rows = rows[rows["term"] == term].reset_index(drop=True)
+    rows = rows.assign(query_id=0, clause=0, df=len(rows), field="content")
+    stats = {
+        "content": {
+            "n_docs": float(meta["n_docs"]), "avgdl": float(meta["avgdl"]),
+            "boost": 1.0, "block_size": meta["block_size"],
+        }
+    }
+    kernel = _fused_scorer(stats, 10, "bmw")
+    assert len(kernel(rows.assign(role=0))) > 0
+    with pytest.raises(ValueError, match="taat"):
+        kernel(rows.assign(role=1))
+    syn = rows.assign(role=0, doc_blob=None, _syn_ids=None, _syn_tfs=None)
+    with pytest.raises(ValueError, match="taat"):
+        kernel(syn)
 
 
 def test_cross_fields_vs_replay(spark, mf_index, corpus_pd):
